@@ -6,10 +6,11 @@ execution, no driver collect); an untimed warmup pass absorbs JVM/
 codegen startup so the timed pass measures steady-state throughput.
 
 `--scaling` evidences the two-cluster-size scaling criterion inside
-one box: the same compute-heavy CDC job (16x-replicated orders →
+one box: the same compute-heavy CDC job (64x-replicated orders →
 envelope synthesis → latest-state + SCD2 + aggregate) runs in two
-fresh subprocesses at 8 and 32 cores, and the report carries
-throughput at both plus scaling efficiency.
+fresh subprocesses at 4 and 16 cores by default
+($SPARK_GRAFT_SCALE_LO / $SPARK_GRAFT_SCALE_HI), and the report
+carries throughput at both plus scaling efficiency.
 """
 
 from __future__ import annotations
@@ -150,7 +151,7 @@ SCALE_STAGE_DIR = "/dev/shm/debezium_scale_input"
 
 
 def stage_scaling_input(sf_dir: str) -> None:
-    """Stage a 128x-replicated orders table as multi-file parquet in
+    """Stage a 64x-replicated orders table as 128-file parquet in
     tmpfs (once): multi-file so the scan parallelizes — the sandbox
     tables are single files, a serial Amdahl bottleneck."""
     if os.path.exists(os.path.join(SCALE_STAGE_DIR, "_SUCCESS")):

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.registry import query
 
 UNAVAILABLE = "__debezium_unavailable_value"
 
@@ -177,9 +178,7 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_schema_evolution": CDC_FLAT_SQL
-    + """
+query("cdc_schema_evolution", cdc_schema_evolution_q, CDC_FLAT_SQL + """
         , evolved AS (
             SELECT key, seq, op, o_orderstatus,
                    CASE WHEN seq % 10 >= 2 THEN key % 7 END AS o_discount_pct
@@ -190,9 +189,10 @@ ORACLES_LATE: dict[str, str] = {
             FROM evolved)
         SELECT key, seq AS last_seq, o_orderstatus, o_discount_pct
         FROM latest WHERE rn = 1 AND op <> 'd' ORDER BY key
-    """,
-    "cdc_unavailable_value_fill": CDC_FLAT_SQL
-    + f"""
+    """)
+
+query("cdc_unavailable_value_fill", cdc_unavailable_value_fill_q,
+      CDC_FLAT_SQL + f"""
         , toasted AS (
             SELECT key, seq, op,
                    CASE WHEN op = 'u' AND seq % 3 = 0
@@ -206,9 +206,9 @@ ORACLES_LATE: dict[str, str] = {
                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                    AS priority_filled
         FROM toasted ORDER BY key, seq
-    """,
-    "cdc_decimal_handling": CDC_FLAT_SQL
-    + f"""
+    """)
+
+query("cdc_decimal_handling", cdc_decimal_handling_q, CDC_FLAT_SQL + f"""
         , cents AS (
             SELECT key, seq, after_totalprice AS v,
                    CAST(round(after_totalprice * {10**DECIMAL_SCALE} + 1e-9)
@@ -223,9 +223,9 @@ ORACLES_LATE: dict[str, str] = {
                    lpad(CAST(u % {10**DECIMAL_SCALE} AS VARCHAR),
                         {DECIMAL_SCALE}, '0') END AS price_string
         FROM cents ORDER BY key, seq
-    """,
-    "cdc_temporal_precision": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_temporal_precision", cdc_temporal_precision_q, CDC_FLAT_SQL + """
         SELECT key, seq,
                CAST(datediff('day', DATE '1970-01-01',
                              CAST(o_orderdate AS DATE)) AS INT) AS epoch_days,
@@ -233,15 +233,7 @@ ORACLES_LATE: dict[str, str] = {
                epoch_us(o_orderdate) AS epoch_micros,
                strftime(o_orderdate, '%Y-%m-%dT%H:%M:%SZ') AS iso_ts
         FROM cdc ORDER BY key, seq
-    """,
-}
-
-QUERIES_LATE = {
-    "cdc_schema_evolution": cdc_schema_evolution_q,
-    "cdc_unavailable_value_fill": cdc_unavailable_value_fill_q,
-    "cdc_decimal_handling": cdc_decimal_handling_q,
-    "cdc_temporal_precision": cdc_temporal_precision_q,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -275,7 +267,7 @@ def cdc_binary_handling_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_binary_handling"] = CDC_FLAT_SQL + """
+query("cdc_binary_handling", cdc_binary_handling_q, CDC_FLAT_SQL + """
     , b AS (
         SELECT key, seq,
                from_hex(md5(CAST(key AS VARCHAR) || ':'
@@ -287,5 +279,4 @@ ORACLES_LATE["cdc_binary_handling"] = CDC_FLAT_SQL + """
            to_base64(payload) AS payload_base64,
            lower(hex(payload)) AS payload_hex
     FROM b ORDER BY key, seq
-"""
-QUERIES_LATE["cdc_binary_handling"] = cdc_binary_handling_q
+""")

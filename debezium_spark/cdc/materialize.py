@@ -22,6 +22,7 @@ from debezium_spark.cdc.envelope import (
     synthesize_cdc_flat,
     synthesize_snapshot_flat,
 )
+from debezium_spark.registry import query
 
 STATE_COLS = ("o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority")
 
@@ -298,32 +299,33 @@ def cdc_heartbeat_lag_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES: dict[str, str] = {
-    "cdc_latest_state": CDC_FLAT_SQL
-    + """
+# The batch latest-state answer; every streaming sink must converge to it.
+CDC_LATEST_STATE_SQL = CDC_FLAT_SQL + """
         SELECT key, after_totalprice AS o_totalprice, o_custkey,
                o_orderstatus, o_orderpriority, seq
         FROM (SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
               FROM cdc)
         WHERE rn = 1 AND op <> 'd'
-    """,
-    "cdc_scd2": CDC_FLAT_SQL
-    + """
+    """
+
+query("cdc_latest_state", cdc_latest_state_q, CDC_LATEST_STATE_SQL)
+
+query("cdc_scd2", cdc_scd2_q, CDC_FLAT_SQL + """
         SELECT key, seq AS valid_from_seq, valid_to_seq,
                valid_to_seq IS NULL AS is_current,
                after_totalprice AS o_totalprice, op
         FROM (SELECT *, lead(seq) OVER (PARTITION BY key ORDER BY seq) AS valid_to_seq
               FROM cdc)
         WHERE op <> 'd'
-    """,
-    "cdc_tombstones": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_tombstones", cdc_tombstones_q, CDC_FLAT_SQL + """
         SELECT key, seq AS delete_seq, ts_ms AS delete_ts_ms,
                CAST(NULL AS VARCHAR) AS value
         FROM cdc WHERE op = 'd'
-    """,
-    "cdc_snapshot_merge": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_snapshot_merge", cdc_snapshot_merge_q, CDC_FLAT_SQL + """
         , snap_base AS (
             SELECT o_orderkey AS key,
                    o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS after_totalprice,
@@ -339,9 +341,10 @@ ORACLES: dict[str, str] = {
               FROM unioned)
         WHERE rn = 1 AND op <> 'd'
         GROUP BY op ORDER BY op
-    """,
-    "cdc_incremental_snapshot": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_incremental_snapshot", cdc_incremental_snapshot_q,
+      CDC_FLAT_SQL + """
         , snap_base AS (
             SELECT o_orderkey AS key,
                    o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS o_totalprice
@@ -365,16 +368,16 @@ ORACLES: dict[str, str] = {
         )
         SELECT origin, count(*) AS n, round(sum(o_totalprice), 2) AS sum_totalprice
         FROM merged GROUP BY origin ORDER BY origin
-    """,
-    "cdc_txn_boundaries": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_txn_boundaries", cdc_txn_boundaries_q, CDC_FLAT_SQL + """
         SELECT seq // 100 AS txn_id, count(*) AS event_count,
                min(seq) AS begin_seq, max(seq) AS end_seq,
                count(DISTINCT key) AS n_keys
         FROM cdc GROUP BY txn_id ORDER BY txn_id
-    """,
-    "cdc_transaction_topic": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_transaction_topic", cdc_transaction_topic_q, CDC_FLAT_SQL + """
         , bounds AS (
             SELECT seq // 100 AS txn_id, min(seq) AS begin_seq,
                    max(seq) AS end_seq, count(*) AS event_count
@@ -386,9 +389,9 @@ ORACLES: dict[str, str] = {
         UNION ALL
         SELECT txn_id, 'END' AS status, end_seq AS marker_seq, event_count
         FROM bounds
-    """,
-    "cdc_seq_gaps": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_seq_gaps", cdc_seq_gaps_q, CDC_FLAT_SQL + """
         SELECT shard, count(*) AS n_gaps, max(gap) AS max_gap,
                round(avg(gap) + 1e-9, 2) AS avg_gap
         FROM (SELECT key % 4 AS shard, seq,
@@ -396,27 +399,14 @@ ORACLES: dict[str, str] = {
               FROM cdc)
         WHERE gap > 38
         GROUP BY shard ORDER BY shard
-    """,
-    "cdc_heartbeat_lag": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_heartbeat_lag", cdc_heartbeat_lag_q, CDC_FLAT_SQL + """
         SELECT key % 4 AS shard, count(*) AS n_events,
                max(ts_ms) AS shard_high_wm,
                (SELECT max(ts_ms) FROM cdc) - max(ts_ms) AS lag_ms
         FROM cdc GROUP BY shard ORDER BY shard
-    """,
-}
-
-QUERIES = {
-    "cdc_latest_state": cdc_latest_state_q,
-    "cdc_scd2": cdc_scd2_q,
-    "cdc_tombstones": cdc_tombstones_q,
-    "cdc_snapshot_merge": cdc_snapshot_merge_q,
-    "cdc_incremental_snapshot": cdc_incremental_snapshot_q,
-    "cdc_txn_boundaries": cdc_txn_boundaries_q,
-    "cdc_transaction_topic": cdc_transaction_topic_q,
-    "cdc_seq_gaps": cdc_seq_gaps_q,
-    "cdc_heartbeat_lag": cdc_heartbeat_lag_q,
-}
+    """)
 
 
 TRUNC_SEQ = 10005  # fixed marker: keys ≤ ~1000 wiped at every sf
@@ -454,9 +444,7 @@ def cdc_truncate_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_truncate_state": CDC_FLAT_SQL
-    + f"""
+query("cdc_truncate_state", cdc_truncate_state_q, CDC_FLAT_SQL + f"""
         , surv AS (SELECT * FROM cdc WHERE seq > {TRUNC_SEQ}),
         latest AS (
             SELECT * FROM (
@@ -468,12 +456,7 @@ ORACLES_LATE: dict[str, str] = {
                CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                     AS BIGINT) AS sum_after_cents
         FROM latest
-    """,
-}
-
-QUERIES_LATE = {
-    "cdc_truncate_state": cdc_truncate_state_q,
-}
+    """)
 
 
 def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,7 +483,7 @@ def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_composite_key_state"] = CDC_FLAT_SQL + """
+query("cdc_composite_key_state", cdc_composite_key_state_q, CDC_FLAT_SQL + """
     SELECT o_custkey, o_orderpriority, key, seq,
            after_totalprice AS o_totalprice
     FROM (SELECT *, row_number() OVER (
@@ -508,8 +491,7 @@ ORACLES_LATE["cdc_composite_key_state"] = CDC_FLAT_SQL + """
               ORDER BY seq DESC) AS rn
           FROM cdc WHERE op <> 'd')
     WHERE rn = 1
-"""
-QUERIES_LATE["cdc_composite_key_state"] = cdc_composite_key_state_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -541,15 +523,14 @@ def cdc_redelivery_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.join(unique, "op").orderBy("op")
 
 
-ORACLES_LATE["cdc_redelivery_dedup"] = CDC_FLAT_SQL + """
+query("cdc_redelivery_dedup", cdc_redelivery_dedup_q, CDC_FLAT_SQL + """
     , delivered AS (
         SELECT * FROM cdc
         UNION ALL SELECT * FROM cdc WHERE seq % 5 = 1)
     SELECT op, count(*) AS n_delivered,
            count(DISTINCT seq) AS n_unique
     FROM delivered GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["cdc_redelivery_dedup"] = cdc_redelivery_dedup_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -611,7 +592,7 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
+query("cdc_pk_update_rekey", cdc_pk_update_rekey_q, CDC_FLAT_SQL + f"""
     , marked AS (
         SELECT *,
                1 + (key * 2654435761) % 3 AS nv,
@@ -640,8 +621,7 @@ ORACLES_LATE["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
     SELECT key AS new_key, key - {REKEY_OFFSET} AS orig_key,
            seq AS last_seq, after_totalprice AS o_totalprice
     FROM latest WHERE key >= {REKEY_OFFSET} ORDER BY new_key
-"""
-QUERIES_LATE["cdc_pk_update_rekey"] = cdc_pk_update_rekey_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -695,7 +675,8 @@ def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
+query("cdc_jdbc_sink_soft_delete", cdc_jdbc_sink_soft_delete_q,
+      CDC_FLAT_SQL + """
     , ranked AS (
         SELECT key, after_totalprice, o_orderstatus, seq,
                row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
@@ -705,8 +686,7 @@ ORACLES_LATE["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
            r.seq, d.key IS NOT NULL AS was_deleted
     FROM ranked r LEFT JOIN deleted d ON r.key = d.key
     WHERE r.rn = 1 ORDER BY r.key
-"""
-QUERIES_LATE["cdc_jdbc_sink_soft_delete"] = cdc_jdbc_sink_soft_delete_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -773,7 +753,8 @@ def cdc_txn_consistent_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
+query("cdc_txn_consistent_apply", cdc_txn_consistent_apply_q,
+      CDC_FLAT_SQL + f"""
     , t AS (SELECT *, seq % {TXN_BUCKETS} AS txn_id FROM cdc),
     cut AS (SELECT CAST(floor(max(seq) * 9 / 10) AS BIGINT) AS c FROM t),
     complete AS (
@@ -796,8 +777,7 @@ ORACLES_LATE["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
                 AS BIGINT) AS sum_cents,
            count(DISTINCT txn_id) AS n_txns_in_state
     FROM state
-"""
-QUERIES_LATE["cdc_txn_consistent_apply"] = cdc_txn_consistent_apply_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -851,7 +831,7 @@ def cdc_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_pit_join"] = CDC_FLAT_SQL + """
+query("cdc_pit_join", cdc_pit_join_q, CDC_FLAT_SQL + """
     , hist AS (
         SELECT key, seq AS valid_from_seq,
                lead(seq) OVER (PARTITION BY key ORDER BY seq)
@@ -873,8 +853,7 @@ ORACLES_LATE["cdc_pit_join"] = CDC_FLAT_SQL + """
      AND (hist.valid_to_seq IS NULL
           OR probes.probe_seq < hist.valid_to_seq)
     GROUP BY off ORDER BY off
-"""
-QUERIES_LATE["cdc_pit_join"] = cdc_pit_join_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -929,7 +908,7 @@ def cdc_compact_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_compact_retention"] = CDC_FLAT_SQL + """
+query("cdc_compact_retention", cdc_compact_retention_q, CDC_FLAT_SQL + """
     , latest AS (
         SELECT key, seq, op, after_totalprice, ts_ms
         FROM cdc
@@ -944,8 +923,7 @@ ORACLES_LATE["cdc_compact_retention"] = CDC_FLAT_SQL + """
     FROM latest, bounds
     WHERE op != 'd' OR ts_ms > wm - ret
     ORDER BY key
-"""
-QUERIES_LATE["cdc_compact_retention"] = cdc_compact_retention_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -988,7 +966,7 @@ def cdc_incremental_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_incremental_agg"] = CDC_FLAT_SQL + """
+query("cdc_incremental_agg", cdc_incremental_agg_q, CDC_FLAT_SQL + """
     SELECT o_custkey,
            CAST(sum(CASE op WHEN 'c' THEN 1 WHEN 'd' THEN -1 ELSE 0 END)
                 AS BIGINT) AS n_live_orders,
@@ -1000,8 +978,7 @@ ORACLES_LATE["cdc_incremental_agg"] = CDC_FLAT_SQL + """
     GROUP BY o_custkey
     HAVING n_live_orders > 0
     ORDER BY o_custkey
-"""
-QUERIES_LATE["cdc_incremental_agg"] = cdc_incremental_agg_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -1043,7 +1020,7 @@ def cdc_txn_event_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("seq")
 
 
-ORACLES_LATE["cdc_txn_event_order"] = CDC_FLAT_SQL + """
+query("cdc_txn_event_order", cdc_txn_event_order_q, CDC_FLAT_SQL + """
     SELECT key, seq, seq // 100 AS txn_id,
            'orders_' || CAST(key % 3 AS VARCHAR) AS collection,
            CAST(row_number() OVER (PARTITION BY seq // 100
@@ -1052,8 +1029,7 @@ ORACLES_LATE["cdc_txn_event_order"] = CDC_FLAT_SQL + """
                                    ORDER BY seq) AS BIGINT)
                AS data_collection_order
     FROM cdc ORDER BY seq
-"""
-QUERIES_LATE["cdc_txn_event_order"] = cdc_txn_event_order_q
+""")
 
 
 def cdc_rate_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,7 +1077,7 @@ def cdc_rate_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("shard", "bucket")
 
 
-ORACLES_LATE["cdc_rate_anomaly"] = CDC_FLAT_SQL + """
+query("cdc_rate_anomaly", cdc_rate_anomaly_q, CDC_FLAT_SQL + """
     , counts AS (
         SELECT key % 3 AS shard, ts_ms // 10000 AS bucket,
                CAST(count(*) AS BIGINT) AS n
@@ -1122,5 +1098,4 @@ ORACLES_LATE["cdc_rate_anomaly"] = CDC_FLAT_SQL + """
            AND (n * hist_buckets - hist_sum) * (n * hist_buckets - hist_sum)
                > hist_buckets * hist_sumsq - hist_sum * hist_sum AS spike
     FROM hist ORDER BY shard, bucket
-"""
-QUERIES_LATE["cdc_rate_anomaly"] = cdc_rate_anomaly_q
+""")

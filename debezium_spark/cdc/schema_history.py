@@ -16,6 +16,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from debezium_spark.registry import query
+
 
 def schema_signature(df: DataFrame) -> list[tuple[str, str]]:
     """(name, dataType) pairs in column order."""
@@ -98,20 +100,15 @@ _FLAT_SIG = (
     "o_orderpriority:string,__op:string,__ts_ms:bigint,__table:string"
 )
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_schema_history": f"""
+
+query("cdc_schema_history", cdc_schema_history_q, f"""
         WITH v(version, "table", columns) AS (VALUES
             (0, 'orders.envelope', '{_ENVELOPE_SIG}'),
             (1, 'orders.flat', '{_FLAT_SIG}'),
             (2, 'orders.flat', '{_FLAT_SIG},__deleted:boolean'))
         SELECT version, "table", columns, md5(columns) AS fingerprint
         FROM v ORDER BY version
-    """,
-}
-
-QUERIES_LATE = {
-    "cdc_schema_history": cdc_schema_history_q,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -285,7 +282,7 @@ _SIG5 = _SIG4.replace("o_orderpriority:string:n,", "")
 _SIG6 = _SIG5.replace("o_totalprice:double:n", "o_totalprice:double:r")
 _SIG7 = _SIG6.replace("source_system:string:r", "source_system:string:n")
 
-ORACLES_LATE["cdc_schema_compatibility"] = f"""
+query("cdc_schema_compatibility", cdc_schema_compatibility_q, f"""
     WITH v(version, columns) AS (VALUES
         (0, '{_SIG0}'), (1, '{_SIG1}'), (2, '{_SIG2}'),
         (3, '{_SIG3}'), (4, '{_SIG4}'), (5, '{_SIG5}'),
@@ -333,5 +330,4 @@ ORACLES_LATE["cdc_schema_compatibility"] = f"""
                 WHEN removed_req + req_to_opt = 0 THEN 'FORWARD'
                 ELSE 'NONE' END AS compat
     FROM agg ORDER BY from_version
-"""
-QUERIES_LATE["cdc_schema_compatibility"] = cdc_schema_compatibility_q
+""")

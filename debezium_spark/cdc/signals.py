@@ -23,20 +23,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.cdc.envelope import SNAPSHOT_FLAT_SQL
+from debezium_spark.registry import query
+
 SIGNAL_SCHEMA = "signal_id string, type string, data string"
-
-from debezium_spark.cdc.envelope import SNAPSHOT_FLAT_SQL  # noqa: E402
-
-ORACLES: dict[str, str] = {
-    "cdc_signal_snapshot": SNAPSHOT_FLAT_SQL
-    + """
-        SELECT key // 1000 AS chunk, count(*) AS n,
-               round(sum(after_totalprice), 2) AS sum_totalprice
-        FROM snap
-        WHERE key // 1000 IN (0, 2)
-        GROUP BY chunk ORDER BY chunk
-    """,
-}
 
 
 def parse_signals(signals: DataFrame) -> DataFrame:
@@ -147,4 +137,10 @@ def notifications(signals: DataFrame) -> DataFrame:
     )
 
 
-QUERIES = {"cdc_signal_snapshot": cdc_signal_snapshot_q}
+query("cdc_signal_snapshot", cdc_signal_snapshot_q, SNAPSHOT_FLAT_SQL + """
+        SELECT key // 1000 AS chunk, count(*) AS n,
+               round(sum(after_totalprice), 2) AS sum_totalprice
+        FROM snap
+        WHERE key // 1000 IN (0, 2)
+        GROUP BY chunk ORDER BY chunk
+    """)

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 
@@ -376,9 +377,7 @@ def cdc_changed_columns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_changed_columns": CDC_FLAT_SQL
-    + """
+query("cdc_changed_columns", cdc_changed_columns_q, CDC_FLAT_SQL + """
         SELECT concat_ws(',',
                    CASE WHEN before_totalprice IS DISTINCT FROM after_totalprice
                         THEN 'o_totalprice' END,
@@ -397,87 +396,69 @@ ORACLES_LATE: dict[str, str] = {
                count(DISTINCT key) AS n_keys
         FROM cdc WHERE op = 'u'
         GROUP BY changed, unchanged ORDER BY changed
-    """,
-}
+    """)
 
-QUERIES_LATE = {
-    "cdc_changed_columns": cdc_changed_columns_q,
-}
 
-ORACLES: dict[str, str] = {
-    "cdc_stream_sample": CDC_FLAT_SQL
-    + """
+query("cdc_stream_sample", cdc_stream_sample_q, CDC_FLAT_SQL + """
         SELECT key, op, seq, ts_ms, before_totalprice, after_totalprice,
                o_custkey, o_orderstatus, o_orderpriority
         FROM cdc
-    """,
-    "cdc_extract_new_state": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_extract_new_state", cdc_extract_new_state_q, CDC_FLAT_SQL + """
         SELECT key, after_totalprice AS o_totalprice, o_custkey,
                o_orderstatus, o_orderpriority,
                op AS __op, ts_ms AS __ts_ms, 'orders' AS __table
         FROM cdc WHERE op <> 'd'
-    """,
-    "cdc_filter_high_value": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_filter_high_value", cdc_filter_high_value_q, CDC_FLAT_SQL + """
         SELECT key, seq, op, after_totalprice
         FROM cdc WHERE op = 'u' AND after_totalprice > 50000.0
-    """,
-    "cdc_route_topics": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_route_topics", cdc_route_topics_q, CDC_FLAT_SQL + """
         SELECT CASE WHEN op = 'd' THEN 'cdc.orders.deletes'
                     WHEN after_totalprice > 100000.0 THEN 'cdc.orders.priority'
                     ELSE 'cdc.orders' END AS final_topic,
                count(*) AS n
         FROM cdc GROUP BY final_topic ORDER BY final_topic
-    """,
-    "cdc_mask_truncate": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_mask_truncate", cdc_mask_truncate_q, CDC_FLAT_SQL + """
         SELECT key, op AS __op,
                substring(o_orderstatus, 1, 1) AS o_orderstatus,
                md5(o_orderpriority) AS o_orderpriority
         FROM cdc WHERE key < 2000 AND op <> 'd'
-    """,
-    "cdc_extract_rewrite": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_extract_rewrite", cdc_extract_rewrite_q, CDC_FLAT_SQL + """
         SELECT key, after_totalprice AS o_totalprice, o_orderstatus,
                op AS __op, op = 'd' AS __deleted
         FROM cdc
-    """,
-    "cdc_partition_route": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_partition_route", cdc_partition_route_q, CDC_FLAT_SQL + """
         SELECT (key * 2654435761) % 4294967296 % 16 AS partition,
                count(*) AS n, min(seq) AS min_seq, max(seq) AS max_seq
         FROM cdc GROUP BY partition ORDER BY partition
-    """,
-    "cdc_tz_convert": CDC_FLAT_SQL
-    + """
+    """)
+
+query("cdc_tz_convert", cdc_tz_convert_q, CDC_FLAT_SQL + """
         SELECT key, seq,
                strftime(o_orderdate AT TIME ZONE 'UTC'
                         AT TIME ZONE 'America/New_York',
                         '%Y-%m-%d %H:%M:%S') AS local_ts
         FROM cdc WHERE key < 2000
-    """,
-    "cdc_outbox_route": """
+    """)
+
+query("cdc_outbox_route", cdc_outbox_route_q, """
         SELECT 'outbox.event.' || event_type AS topic,
                count(*) AS n,
                CAST(sum(CAST(props ->> '$.k' AS BIGINT)) AS BIGINT) AS sum_k,
                count(DISTINCT CAST(user_id AS VARCHAR)) AS n_aggregates
         FROM events GROUP BY topic ORDER BY topic
-    """,
-}
-
-QUERIES = {
-    "cdc_stream_sample": cdc_stream_sample_q,
-    "cdc_extract_new_state": cdc_extract_new_state_q,
-    "cdc_filter_high_value": cdc_filter_high_value_q,
-    "cdc_route_topics": cdc_route_topics_q,
-    "cdc_mask_truncate": cdc_mask_truncate_q,
-    "cdc_extract_rewrite": cdc_extract_rewrite_q,
-    "cdc_partition_route": cdc_partition_route_q,
-    "cdc_tz_convert": cdc_tz_convert_q,
-    "cdc_outbox_route": cdc_outbox_route_q,
-}
+    """)
 
 
 def cdc_header_to_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,12 +477,11 @@ def cdc_header_to_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_header_to_value"] = CDC_FLAT_SQL + """
+query("cdc_header_to_value", cdc_header_to_value_q, CDC_FLAT_SQL + """
     SELECT op AS __op, count(*) AS n,
            min(ts_ms) AS min_ts, max(ts_ms) AS max_ts
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["cdc_header_to_value"] = cdc_header_to_value_q
+""")
 
 
 def cdc_snapshot_modes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,7 +510,7 @@ def cdc_snapshot_modes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("mode")
 
 
-ORACLES_LATE["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
+query("cdc_snapshot_modes", cdc_snapshot_modes_q, CDC_FLAT_SQL + """
     , snap AS (
         SELECT o_orderkey AS key, 'r' AS op
         FROM orders WHERE (o_orderkey * 40503) % 10 <> 0),
@@ -549,8 +529,7 @@ ORACLES_LATE["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
         SELECT 'when_needed', count(*),
                CAST(0 AS BIGINT), count(DISTINCT key) FROM cdc)
     SELECT mode, n_events, n_snapshot, n_keys FROM m ORDER BY mode
-"""
-QUERIES_LATE["cdc_snapshot_modes"] = cdc_snapshot_modes_q
+""")
 
 
 def cdc_logical_table_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,13 +552,12 @@ def cdc_logical_table_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_logical_table_route"] = CDC_FLAT_SQL + """
+query("cdc_logical_table_route", cdc_logical_table_route_q, CDC_FLAT_SQL + """
     SELECT 'orders_0' || CAST(key % 3 AS VARCHAR) AS __physical_table,
            'cdc.orders' AS __logical_topic,
            count(*) AS n_events, count(DISTINCT key) AS n_keys
     FROM cdc GROUP BY 1, 2 ORDER BY __physical_table
-"""
-QUERIES_LATE["cdc_logical_table_route"] = cdc_logical_table_route_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -656,14 +634,13 @@ def cdc_connect_smt_chain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_connect_smt_chain"] = CDC_FLAT_SQL + """
+query("cdc_connect_smt_chain", cdc_connect_smt_chain_q, CDC_FLAT_SQL + """
     SELECT key, seq, op, o_orderpriority AS priority,
            CAST(trunc(after_totalprice) AS BIGINT) AS amount,
            CAST(o_custkey AS VARCHAR) AS o_custkey,
            'erp' AS source_system, seq AS __offset
     FROM cdc WHERE key < 2000 AND op <> 'd'
-"""
-QUERIES_LATE["cdc_connect_smt_chain"] = cdc_connect_smt_chain_q
+""")
 
 
 def extract_new_document_state(
@@ -731,15 +708,15 @@ def mongo_extract_new_document_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mongo_extract_new_document"] = CDC_FLAT_SQL + """
+query("mongo_extract_new_document", mongo_extract_new_document_q,
+      CDC_FLAT_SQL + """
     SELECT key AS id,
            CASE WHEN op <> 'd'
                 THEN round(after_totalprice + 1e-9, 2) END AS o_totalprice,
            CASE WHEN op <> 'd' THEN o_custkey END AS custkey,
            op AS __op, ts_ms AS __ts_ms, op = 'd' AS __deleted
     FROM cdc WHERE key < 2000
-"""
-QUERIES_LATE["mongo_extract_new_document"] = mongo_extract_new_document_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -791,7 +768,7 @@ def cdc_dlq_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_dlq_route"] = """
+query("cdc_dlq_route", cdc_dlq_route_q, """
     WITH c AS (
         SELECT event_type, event_id,
                CASE WHEN event_id % 37 = 0 THEN 'x' || props ELSE props END
@@ -806,8 +783,7 @@ ORACLES_LATE["cdc_dlq_route"] = """
            min(CASE WHEN dlq THEN event_id END) AS min_dlq_offset,
            max(CASE WHEN dlq THEN event_id END) AS max_dlq_offset
     FROM tagged GROUP BY event_type ORDER BY event_type
-"""
-QUERIES_LATE["cdc_dlq_route"] = cdc_dlq_route_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -851,12 +827,11 @@ def cdc_value_to_header_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_value_to_header"] = CDC_FLAT_SQL + """
+query("cdc_value_to_header", cdc_value_to_header_q, CDC_FLAT_SQL + """
     SELECT o_orderpriority AS hdr_priority, op AS hdr_op, count(*) AS n,
            min(seq) AS min_seq, max(seq) AS max_seq
     FROM cdc GROUP BY 1, 2 ORDER BY hdr_priority, hdr_op
-"""
-QUERIES_LATE["cdc_value_to_header"] = cdc_value_to_header_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -905,13 +880,12 @@ def cdc_add_fields_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Spark's double→long cast truncates toward zero; seq > 0 so floor()
 # reproduces it in DuckDB (a bare CAST would round half-even).
-ORACLES_LATE["cdc_add_fields"] = CDC_FLAT_SQL + """
+query("cdc_add_fields", cdc_add_fields_q, CDC_FLAT_SQL + """
     SELECT op AS __op, 'orders' AS __source_table, count(*) AS n,
            min(seq) AS min_seq, max(seq) AS max_seq,
            count(DISTINCT CAST(floor(seq / 100.0) AS BIGINT)) AS n_txn
     FROM cdc WHERE op <> 'd' GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["cdc_add_fields"] = cdc_add_fields_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -960,7 +934,7 @@ def cdc_timestamp_router_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_timestamp_router"] = CDC_FLAT_SQL + """
+query("cdc_timestamp_router", cdc_timestamp_router_q, CDC_FLAT_SQL + """
     SELECT 'orders.' || strftime(o_orderdate, '%Y%m') AS topic,
            'orders/year=' || strftime(o_orderdate, '%Y') ||
            '/month=' || strftime(o_orderdate, '%m') AS path,
@@ -972,8 +946,7 @@ ORACLES_LATE["cdc_timestamp_router"] = CDC_FLAT_SQL + """
     FROM cdc
     GROUP BY topic, path
     ORDER BY topic
-"""
-QUERIES_LATE["cdc_timestamp_router"] = cdc_timestamp_router_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -1063,7 +1036,7 @@ def cdc_smt_predicates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key", "seq")
 
 
-ORACLES_LATE["cdc_smt_predicates"] = CDC_FLAT_SQL + """
+query("cdc_smt_predicates", cdc_smt_predicates_q, CDC_FLAT_SQL + """
     SELECT key, seq, op,
            CASE WHEN after_totalprice >= 300000
                 THEN 'cdc.orders.high' ELSE 'cdc.orders.std' END AS topic,
@@ -1072,8 +1045,7 @@ ORACLES_LATE["cdc_smt_predicates"] = CDC_FLAT_SQL + """
                AS priority_out,
            op <> 'c' AS __unsourced
     FROM cdc WHERE key < 3000 ORDER BY key, seq
-"""
-QUERIES_LATE["cdc_smt_predicates"] = cdc_smt_predicates_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -1128,7 +1100,7 @@ def cdc_flatten_envelope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key", "seq")
 
 
-ORACLES_LATE["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
+query("cdc_flatten_envelope", cdc_flatten_envelope_q, CDC_FLAT_SQL + """
     SELECT key, seq, op,
            before_totalprice AS before_o_totalprice,
            after_totalprice AS after_o_totalprice,
@@ -1136,5 +1108,4 @@ ORACLES_LATE["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
            seq AS source_seq,
            seq // 100 AS transaction_id
     FROM cdc WHERE key < 3000 ORDER BY key, seq
-"""
-QUERIES_LATE["cdc_flatten_envelope"] = cdc_flatten_envelope_q
+""")

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
+
 
 def salted_sum_count(
     df: DataFrame,
@@ -64,19 +66,13 @@ def salted_hot_key_agg_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "salted_hot_key_agg": """
+query("salted_hot_key_agg", salted_hot_key_agg_q, """
         SELECT event_type,
                CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
                    AS sum_cents,
                count(*) AS n
         FROM events GROUP BY event_type ORDER BY event_type
-    """,
-}
-
-QUERIES_LATE = {
-    "salted_hot_key_agg": salted_hot_key_agg_q,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -136,7 +132,7 @@ def salted_skew_join_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["salted_skew_join"] = """
+query("salted_skew_join", salted_skew_join_q, """
     WITH e AS (SELECT event_type, user_id,
                       CAST(round(value * 100 + 1e-9) AS BIGINT) AS cents
                FROM events),
@@ -148,5 +144,4 @@ ORACLES_LATE["salted_skew_join"] = """
            min(dim.first_user) AS first_user
     FROM e JOIN dim USING (event_type)
     GROUP BY e.event_type, dim.type_tag ORDER BY e.event_type
-"""
-QUERIES_LATE["salted_skew_join"] = salted_skew_join_q
+""")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 
@@ -237,30 +238,7 @@ def asof_join_pandas(
     )
 
 
-ORACLES: dict[str, str] = {
-    "topk_parts_per_brand": """
-        SELECT p_brand, p_partkey, revenue, rank FROM (
-            SELECT p_brand, p_partkey, revenue,
-                   CAST(row_number() OVER (PARTITION BY p_brand
-                                           ORDER BY revenue DESC, p_partkey) AS INT) AS rank
-            FROM (SELECT p_brand, p_partkey,
-                         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-                  FROM lineitem JOIN part ON l_partkey = p_partkey
-                  GROUP BY p_brand, p_partkey))
-        WHERE rank <= 3
-        ORDER BY p_brand, rank
-    """,
-    "running_total_per_customer": """
-        SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
-               round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-                                             ORDER BY o_orderdate, o_orderkey
-                                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-                   AS cum_spend
-        FROM orders
-        WHERE o_custkey < 100
-        ORDER BY o_custkey, o_orderdate, o_orderkey
-    """,
-    "sessionize_events": """
+query("sessionize_events", sessionize_events, """
         SELECT user_id, CAST(sum(session_start) AS BIGINT) AS n_sessions, count(*) AS n_events
         FROM (
             SELECT user_id,
@@ -270,29 +248,9 @@ ORACLES: dict[str, str] = {
             FROM events)
         GROUP BY user_id
         ORDER BY user_id
-    """,
-    "asof_purchase_order": """
-        SELECT event_id, user_id, o_orderkey,
-               CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice
-        FROM (
-            SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, o.o_totalprice,
-                   row_number() OVER (PARTITION BY e.event_id
-                                      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-            FROM events e JOIN orders o ON e.user_id = o.o_custkey
-            WHERE e.event_type = 'purchase' AND o.o_orderdate <= e.ts)
-        WHERE rn = 1
-        ORDER BY event_id
-    """,
-    "events_hourly_window": """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
-                   AS window_start,
-               event_type,
-               count(*) AS n, round(sum(value), 2) AS total_value
-        FROM events
-        GROUP BY window_start, event_type
-        ORDER BY window_start, event_type
-    """,
-    "funnel_view_click_purchase": """
+    """)
+
+query("funnel_view_click_purchase", funnel_view_click_purchase, """
         SELECT count(*) AS n_users,
                CAST(sum(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
                CAST(sum(CASE WHEN t_view < t_click THEN 1 ELSE 0 END) AS BIGINT) AS n_view_click,
@@ -304,8 +262,67 @@ ORACLES: dict[str, str] = {
                    min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
                    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
             FROM events GROUP BY user_id)
-    """,
-    "cohort_retention": """
+    """)
+
+query("topk_parts_per_brand", topk_parts_per_brand, """
+        SELECT p_brand, p_partkey, revenue, rank FROM (
+            SELECT p_brand, p_partkey, revenue,
+                   CAST(row_number() OVER (PARTITION BY p_brand
+                                           ORDER BY revenue DESC, p_partkey) AS INT) AS rank
+            FROM (SELECT p_brand, p_partkey,
+                         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+                  FROM lineitem JOIN part ON l_partkey = p_partkey
+                  GROUP BY p_brand, p_partkey))
+        WHERE rank <= 3
+        ORDER BY p_brand, rank
+    """)
+
+query("running_total_per_customer", running_total_per_customer, """
+        SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
+               round(sum(o_totalprice) OVER (PARTITION BY o_custkey
+                                             ORDER BY o_orderdate, o_orderkey
+                                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
+                   AS cum_spend
+        FROM orders
+        WHERE o_custkey < 100
+        ORDER BY o_custkey, o_orderdate, o_orderkey
+    """)
+
+query("asof_purchase_order", asof_purchase_order, """
+        SELECT event_id, user_id, o_orderkey,
+               CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice
+        FROM (
+            SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate, o.o_totalprice,
+                   row_number() OVER (PARTITION BY e.event_id
+                                      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
+            FROM events e JOIN orders o ON e.user_id = o.o_custkey
+            WHERE e.event_type = 'purchase' AND o.o_orderdate <= e.ts)
+        WHERE rn = 1
+        ORDER BY event_id
+    """)
+
+query("events_hourly_window", events_hourly_window, """
+        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
+                   AS window_start,
+               event_type,
+               count(*) AS n, round(sum(value), 2) AS total_value
+        FROM events
+        GROUP BY window_start, event_type
+        ORDER BY window_start, event_type
+    """)
+
+query("events_value_percentiles", events_value_percentiles, """
+        SELECT event_type,
+               round(quantile_cont(value, 0.5), 4)  AS p50,
+               round(quantile_cont(value, 0.9), 4)  AS p90,
+               round(quantile_cont(value, 0.99), 4) AS p99,
+               count(DISTINCT user_id) AS distinct_users
+        FROM events
+        GROUP BY event_type
+        ORDER BY event_type
+    """)
+
+query("cohort_retention", cohort_retention, """
         WITH weekly AS (
             SELECT DISTINCT user_id,
                    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS week
@@ -316,32 +333,7 @@ ORACLES: dict[str, str] = {
         FROM weekly w JOIN cohorts c ON w.user_id = c.user_id
         GROUP BY cohort_week, week
         ORDER BY cohort_week, week
-    """,
-    "events_value_percentiles": """
-        SELECT event_type,
-               round(quantile_cont(value, 0.5), 4)  AS p50,
-               round(quantile_cont(value, 0.9), 4)  AS p90,
-               round(quantile_cont(value, 0.99), 4) AS p99,
-               count(DISTINCT user_id) AS distinct_users
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-}
-
-# sessionize/funnel lead: both had a round-3 typed-hash fix (integer
-# sums cast to BIGINT in the oracle) that external gates should
-# re-verify even under a prefix budget.
-QUERIES = {
-    "sessionize_events": sessionize_events,
-    "funnel_view_click_purchase": funnel_view_click_purchase,
-    "topk_parts_per_brand": topk_parts_per_brand,
-    "running_total_per_customer": running_total_per_customer,
-    "asof_purchase_order": asof_purchase_order,
-    "events_hourly_window": events_hourly_window,
-    "events_value_percentiles": events_value_percentiles,
-    "cohort_retention": cohort_retention,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -455,8 +447,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "window_rank_suite": """
+query("window_rank_suite", window_rank_suite, """
         WITH spend AS (
             SELECT o_custkey AS custkey,
                    CAST(sum(CAST(round(o_totalprice * 100 + 1e-9) AS BIGINT)) AS BIGINT) AS spend_cents,
@@ -472,8 +463,9 @@ ORACLES_LATE: dict[str, str] = {
         FROM spend JOIN customer ON custkey = c_custkey
         WINDOW w AS (PARTITION BY c_nationkey ORDER BY spend_cents, custkey)
         ORDER BY c_nationkey, rn
-    """,
-    "range_join_views_before_purchase": """
+    """)
+
+query("range_join_views_before_purchase", range_join_views_before_purchase, """
         SELECT p.event_id,
                CAST(count(v.v_us) AS BIGINT) AS n_views_prior_hour,
                round(max(v.v_value) + 1e-9, 4) AS max_view_value
@@ -487,8 +479,9 @@ ORACLES_LATE: dict[str, str] = {
          AND v.v_us < p.p_us
         GROUP BY p.event_id
         ORDER BY p.event_id
-    """,
-    "events_sliding_window": """
+    """)
+
+query("events_sliding_window", events_sliding_window, """
         WITH exploded AS (
             SELECT unnest([
                        make_timestamp((epoch_us(ts) // 3600000000) * 3600000000),
@@ -504,11 +497,4 @@ ORACLES_LATE: dict[str, str] = {
         FROM exploded
         GROUP BY w_start, event_type
         ORDER BY window_start, event_type
-    """,
-}
-
-QUERIES_LATE = {
-    "window_rank_suite": window_rank_suite,
-    "range_join_views_before_purchase": range_join_views_before_purchase,
-    "events_sliding_window": events_sliding_window,
-}
+    """)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 NUM_HASHES = 64
@@ -518,15 +519,16 @@ _DOT_SQL = (
     "(acc, x) -> acc + x)"
 )
 
-ORACLES: dict[str, str] = {
-    "dedup_exact": """
+
+query("dedup_exact", dedup_exact_q, """
         SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5,
                count(*) AS n_docs, min(doc_id) AS canonical_doc_id
         FROM documents
         GROUP BY content_md5
         ORDER BY canonical_doc_id
-    """,
-    "dedup_ngram_jaccard": f"""
+    """)
+
+query("dedup_ngram_jaccard", dedup_ngram_jaccard_q, f"""
         WITH sh AS ({_SHINGLE_SQL}),
         sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
         inter AS (
@@ -538,8 +540,13 @@ ORACLES: dict[str, str] = {
         FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
         WHERE n_inter * 1.0 / (x.n_sh + y.n_sh - n_inter) >= {JACCARD_THRESHOLD}
         ORDER BY doc_a, doc_b
-    """,
-    "dedup_embedding_cosine": f"""
+    """)
+
+query("dedup_minhash_lsh", dedup_minhash_lsh_q, _sql_minhash_lsh())
+
+query("dedup_simhash", dedup_simhash_q, _sql_simhash())
+
+query("dedup_embedding_cosine", dedup_embedding_cosine_q, f"""
         WITH n AS (
             SELECT vec_id, embedding,
                    sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
@@ -551,22 +558,7 @@ ORACLES: dict[str, str] = {
         WHERE {_DOT_SQL.format(a='a.embedding', b='b.embedding')}
               / (a.nrm * b.nrm) >= {COSINE_DUP_THRESHOLD}
         ORDER BY vec_a, vec_b
-    """,
-}
-
-ORACLES["dedup_minhash_lsh"] = _sql_minhash_lsh()
-ORACLES["dedup_simhash"] = _sql_simhash()
-
-QUERIES = {
-    "dedup_exact": dedup_exact_q,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard_q,
-    "dedup_minhash_lsh": dedup_minhash_lsh_q,
-    "dedup_simhash": dedup_simhash_q,
-    "dedup_embedding_cosine": dedup_embedding_cosine_q,
-}
-
-QUERIES_LATE: dict = {}
-ORACLES_LATE: dict = {}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -653,7 +645,7 @@ def dedup_cluster_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["dedup_cluster_components"] = f"""
+query("dedup_cluster_components", dedup_cluster_components_q, f"""
     WITH RECURSIVE pairs AS ({_sql_minhash_lsh()}),
     nodes AS (
         SELECT doc_a AS node FROM pairs
@@ -670,8 +662,7 @@ ORACLES_LATE["dedup_cluster_components"] = f"""
            string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members,
            count(*) - 1 AS n_dropped
     FROM comps GROUP BY comp HAVING count(*) >= 2 ORDER BY cluster_id
-"""
-QUERIES_LATE["dedup_cluster_components"] = dedup_cluster_components_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -741,7 +732,7 @@ def dedup_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segment_dedup(load_table(spark, sf_dir, "documents"))
 
 
-ORACLES_LATE["dedup_segments"] = f"""
+query("dedup_segments", dedup_segments_q, f"""
     WITH words AS (
         SELECT doc_id,
                unnest(range(len(arr))) AS pos,
@@ -767,8 +758,7 @@ ORACLES_LATE["dedup_segments"] = f"""
                     CAST(('0x' || substr(md5(segment), 1, 15)) AS BIGINT)
                     % {_SEG_MOD} ELSE 0 END) AS BIGINT) AS kept_hash_sum
     FROM ranked GROUP BY doc_id ORDER BY doc_id
-"""
-QUERIES_LATE["dedup_segments"] = dedup_segments_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -845,7 +835,7 @@ def dedup_substring_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_span_report(load_table(spark, sf_dir, "documents"))
 
 
-ORACLES_LATE["dedup_substring_spans"] = f"""
+query("dedup_substring_spans", dedup_substring_spans_q, f"""
     WITH toks AS (
         SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
         FROM documents),
@@ -880,8 +870,7 @@ ORACLES_LATE["dedup_substring_spans"] = f"""
            COALESCE(d.longest_dup_span, 0) AS longest_dup_span
     FROM toks t LEFT JOIN per_doc_dups d USING (doc_id)
     ORDER BY t.doc_id
-"""
-QUERIES_LATE["dedup_substring_spans"] = dedup_substring_spans_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -993,5 +982,4 @@ def _sql_semdedup() -> str:
     """
 
 
-ORACLES_LATE["dedup_semantic"] = _sql_semdedup()
-QUERIES_LATE["dedup_semantic"] = dedup_semantic_q
+query("dedup_semantic", dedup_semantic_q, _sql_semdedup())

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 MEDIA_SCHEMA = T.StructType(
@@ -176,8 +177,7 @@ def _sql_media_stats() -> str:
     """
 
 
-QUERIES = {"media_feature_stats": media_feature_stats_q}
-ORACLES: dict[str, str] = {"media_feature_stats": _sql_media_stats()}
+query("media_feature_stats", media_feature_stats_q, _sql_media_stats())
 
 
 def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,8 +198,7 @@ def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "media_frame_sample": """
+query("media_frame_sample", media_frame_sample_q, """
         SELECT doc_id AS media_id,
                CAST(n_chars % 100 + 1 AS INT) AS n_frames,
                CAST((n_chars % 100) // 10 + 1 AS BIGINT) AS n_sampled,
@@ -207,9 +206,7 @@ ORACLES_LATE: dict[str, str] = {
                CAST(((n_chars % 100) // 10) * 10 AS INT) AS last_idx
         FROM documents WHERE doc_id % 3 = 2
         ORDER BY media_id
-    """,
-}
-QUERIES_LATE = {"media_frame_sample": media_frame_sample_q}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -418,7 +415,7 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["media_decode_stats"] = """
+query("media_decode_stats", media_decode_stats_q, """
     WITH img AS (
         SELECT doc_id, n_chars % 16 + 4 AS w, n_chars % 12 + 4 AS h
         FROM documents WHERE doc_id % 3 = 0
@@ -463,8 +460,7 @@ ORACLES_LATE["media_decode_stats"] = """
            round(mean_sum + 1e-9, 4) AS mean_sum,
            CAST(poswt_sum AS BIGINT) AS poswt_sum
     FROM per_kind ORDER BY kind
-"""
-QUERIES_LATE["media_decode_stats"] = media_decode_stats_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -550,7 +546,7 @@ def image_dhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_hash, schema).orderBy("media_id")
 
 
-ORACLES_LATE["image_dhash"] = f"""
+query("image_dhash", image_dhash_q, f"""
     WITH img AS (
         SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
                CAST(n_chars % 12 + 4 AS INT) AS h
@@ -583,8 +579,7 @@ ORACLES_LATE["image_dhash"] = f"""
     FROM graybits
     GROUP BY doc_id, w, h
     ORDER BY media_id
-"""
-QUERIES_LATE["image_dhash"] = image_dhash_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -663,7 +658,7 @@ def audio_contour_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_hash, schema).orderBy("media_id")
 
 
-ORACLES_LATE["audio_contour"] = f"""
+query("audio_contour", audio_contour_q, f"""
     WITH aud AS (
         SELECT doc_id, CAST(n_chars % 256 + 16 AS INT) AS n
         FROM documents WHERE doc_id % 3 = 1
@@ -711,8 +706,7 @@ ORACLES_LATE["audio_contour"] = f"""
     SELECT doc_id AS media_id, CAST(n AS INT) AS n_samples,
            CAST(sum(bit) AS INT) AS contour_hash
     FROM bits GROUP BY doc_id, n ORDER BY media_id
-"""
-QUERIES_LATE["audio_contour"] = audio_contour_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -796,7 +790,7 @@ def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_resize, schema).orderBy("media_id")
 
 
-ORACLES_LATE["media_resize"] = f"""
+query("media_resize", media_resize_q, f"""
     WITH img AS (
         SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
                CAST(n_chars % 12 + 4 AS INT) AS h
@@ -817,5 +811,4 @@ ORACLES_LATE["media_resize"] = f"""
            CAST(sum(r) AS BIGINT) AS r_sum,
            CAST(sum(pos * r) AS BIGINT) AS r_poswt
     FROM px GROUP BY doc_id ORDER BY media_id
-"""
-QUERIES_LATE["media_resize"] = media_resize_q
+""")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 QUALITY_THRESHOLD = 0.5
@@ -266,8 +267,7 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "decontaminate_ngram_overlap": f"""
+query("decontaminate_ngram_overlap", decontaminate_q, f"""
         WITH toks AS (
             SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
             FROM documents),
@@ -291,8 +291,9 @@ ORACLES_LATE: dict[str, str] = {
         FROM documents d LEFT JOIN hits h USING (doc_id)
         WHERE d.doc_id % {EVAL_MOD} <> 0
         ORDER BY d.doc_id
-    """,
-    "sequence_pack": f"""
+    """)
+
+query("sequence_pack", sequence_pack_q, f"""
         WITH t AS (
             SELECT doc_id, source,
                    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -318,25 +319,10 @@ ORACLES_LATE: dict[str, str] = {
                round(sum(pack_tokens) * 1.0
                      / (count(*) * {PACK_CONTEXT}) + 1e-9, 4) AS fill_ratio
         FROM per_pack GROUP BY source ORDER BY source
-    """,
-}
-
-QUERIES_LATE = {
-    "decontaminate_ngram_overlap": decontaminate_q,
-    "sequence_pack": sequence_pack_q,
-}
+    """)
 
 
-ORACLES: dict[str, str] = {
-    "stratified_sample": f"""
-        SELECT source, count(*) AS n_sampled,
-               CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sampled_tokens,
-               min(doc_id) AS first_doc
-        FROM documents
-        WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
-        GROUP BY source ORDER BY source
-    """,
-    "training_mixture": f"""
+query("training_mixture", training_mixture_q, f"""
         WITH scored AS (
             SELECT doc_id, source,
                    CAST(len(w) AS INT) AS n_tokens,
@@ -366,13 +352,16 @@ ORACLES: dict[str, str] = {
         SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
                round(avg(q) + 1e-9, 4) AS avg_quality
         FROM kept GROUP BY source ORDER BY source
-    """,
-}
+    """)
 
-QUERIES = {
-    "training_mixture": training_mixture_q,
-    "stratified_sample": stratified_sample_q,
-}
+query("stratified_sample", stratified_sample_q, f"""
+        SELECT source, count(*) AS n_sampled,
+               CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sampled_tokens,
+               min(doc_id) AS first_doc
+        FROM documents
+        WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
+        GROUP BY source ORDER BY source
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -417,7 +406,7 @@ def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mixture_weights"] = f"""
+query("mixture_weights", mixture_weights_q, f"""
     WITH per AS (
         SELECT source, count(*) AS n_docs,
                CAST(sum(len(string_split_regex(trim(text), '\\s+')))
@@ -433,8 +422,7 @@ ORACLES_LATE["mixture_weights"] = f"""
            round((w_raw / tot_w) / (n_tokens * 1.0 / tot_tokens) + 1e-9, 4)
                AS upsample_factor
     FROM w CROSS JOIN tot ORDER BY source
-"""
-QUERIES_LATE["mixture_weights"] = mixture_weights_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -506,7 +494,7 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_document_pipeline"] = """
+query("cdc_document_pipeline", cdc_document_pipeline_q, """
     WITH base AS (
         SELECT doc_id, source, text,
                1 + (doc_id * 2654435761) % 3 AS nv,
@@ -537,8 +525,7 @@ ORACLES_LATE["cdc_document_pipeline"] = """
                 AS BIGINT) AS total_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars
     FROM live GROUP BY source ORDER BY source
-"""
-QUERIES_LATE["cdc_document_pipeline"] = cdc_document_pipeline_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -585,7 +572,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["chunk_documents"] = f"""
+query("chunk_documents", chunk_documents_q, f"""
     WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                FROM documents),
     s AS (SELECT doc_id, w, len(w) AS n_words,
@@ -605,8 +592,7 @@ ORACLES_LATE["chunk_documents"] = f"""
            CAST(len(toks) AS BIGINT) AS n_tokens,
            md5(array_to_string(toks, ' ')) AS chunk_md5
     FROM c ORDER BY doc_id, chunk_id
-"""
-QUERIES_LATE["chunk_documents"] = chunk_documents_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -681,7 +667,7 @@ def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["dsir_importance"] = f"""
+query("dsir_importance", dsir_importance_q, f"""
     WITH w AS (
         SELECT doc_id, lang,
                CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
@@ -708,5 +694,4 @@ ORACLES_LATE["dsir_importance"] = f"""
     FROM w JOIN r USING (bucket)
     GROUP BY doc_id
     ORDER BY weight_micro DESC, doc_id LIMIT {DSIR_TOP}
-"""
-QUERIES_LATE["dsir_importance"] = dsir_importance_q
+""")

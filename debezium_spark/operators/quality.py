@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 
@@ -124,8 +125,7 @@ def dq_envelope_invariants_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.crossJoin(dup_df)  # two 1-row branches, one job
 
 
-ORACLES: dict[str, str] = {
-    "dq_null_rates": """
+query("dq_null_rates", dq_null_rates_q, """
         SELECT count(*) AS n_rows,
                CAST(sum(CASE WHEN o_orderkey      IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_o_orderkey,
                CAST(sum(CASE WHEN o_custkey       IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_o_custkey,
@@ -134,8 +134,9 @@ ORACLES: dict[str, str] = {
                CAST(sum(CASE WHEN o_orderdate     IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_o_orderdate,
                CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_o_orderpriority
         FROM orders
-    """,
-    "dq_referential_integrity": """
+    """)
+
+query("dq_referential_integrity", dq_referential_integrity_q, """
         SELECT fk, n_violations FROM (
             SELECT 'orders.o_custkey->customer' AS fk,
                    (SELECT count(*) FROM orders o
@@ -157,8 +158,9 @@ ORACLES: dict[str, str] = {
                     WHERE NOT EXISTS (SELECT 1 FROM supplier
                                       WHERE s_suppkey = l.l_suppkey))
         ) ORDER BY fk
-    """,
-    "dq_uniqueness": """
+    """)
+
+query("dq_uniqueness", dq_uniqueness_q, """
         SELECT pk, n_rows, n_duplicated_keys FROM (
             SELECT 'orders.o_orderkey' AS pk,
                    (SELECT count(*) FROM orders) AS n_rows,
@@ -177,9 +179,9 @@ ORACLES: dict[str, str] = {
                    (SELECT count(*) FROM (SELECT event_id FROM events
                      GROUP BY event_id HAVING count(*) > 1))
         ) ORDER BY pk
-    """,
-    "dq_envelope_invariants": CDC_FLAT_SQL
-    + """
+    """)
+
+query("dq_envelope_invariants", dq_envelope_invariants_q, CDC_FLAT_SQL + """
         SELECT
             CAST(sum(CASE WHEN op = 'c' AND before_totalprice IS NOT NULL
                      THEN 1 ELSE 0 END) AS BIGINT) AS creates_with_before,
@@ -191,12 +193,4 @@ ORACLES: dict[str, str] = {
             (SELECT count(*) FROM (SELECT key, seq FROM cdc
               GROUP BY key, seq HAVING count(*) > 1)) AS duplicate_key_seq
         FROM cdc
-    """,
-}
-
-QUERIES = {
-    "dq_null_rates": dq_null_rates_q,
-    "dq_referential_integrity": dq_referential_integrity_q,
-    "dq_uniqueness": dq_uniqueness_q,
-    "dq_envelope_invariants": dq_envelope_invariants_q,
-}
+    """)

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -100,15 +101,15 @@ def orders_set_ops_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES: dict[str, str] = {
-    "events_json_extract": """
+query("events_json_extract", events_json_extract_q, """
         SELECT CAST(k AS BIGINT) // 10 AS k_bucket, count(*) AS n,
                min(k) AS k_min, max(k) AS k_max,
                round(avg(value), 4) AS avg_value
         FROM (SELECT CAST(props ->> '$.k' AS BIGINT) AS k, value FROM events)
         GROUP BY k_bucket ORDER BY k_bucket
-    """,
-    "pivot_event_counts": """
+    """)
+
+query("pivot_event_counts", pivot_event_counts_q, """
         SELECT user_id,
                CAST(sum(CASE WHEN event_type = 'click'    THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
                CAST(sum(CASE WHEN event_type = 'error'    THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
@@ -116,23 +117,26 @@ ORACLES: dict[str, str] = {
                CAST(sum(CASE WHEN event_type = 'signup'   THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
                CAST(sum(CASE WHEN event_type = 'view'     THEN 1 ELSE 0 END) AS BIGINT) AS n_view
         FROM events GROUP BY user_id ORDER BY user_id
-    """,
-    "rollup_revenue": """
+    """)
+
+query("rollup_revenue", rollup_revenue_q, """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         FROM lineitem
         GROUP BY ROLLUP (l_returnflag, l_linestatus)
         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-    "distinct_counts": """
+    """)
+
+query("distinct_counts", distinct_counts_q, """
         SELECT c_nationkey,
                count(DISTINCT o_custkey) AS n_customers,
                count(DISTINCT o_orderpriority) AS n_priorities,
                count(*) AS n_orders
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY c_nationkey ORDER BY c_nationkey
-    """,
-    "orders_set_ops": """
+    """)
+
+query("orders_set_ops", orders_set_ops_q, """
         SELECT o_custkey FROM (
             SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
             INTERSECT
@@ -141,16 +145,7 @@ ORACLES: dict[str, str] = {
         EXCEPT ALL
         SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
         ORDER BY o_custkey
-    """,
-}
-
-QUERIES = {
-    "events_json_extract": events_json_extract_q,
-    "pivot_event_counts": pivot_event_counts_q,
-    "rollup_revenue": rollup_revenue_q,
-    "distinct_counts": distinct_counts_q,
-    "orders_set_ops": orders_set_ops_q,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -180,8 +175,7 @@ def cube_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cube_revenue": """
+query("cube_revenue", cube_revenue_q, """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                CAST(grouping(l_returnflag) AS INT) AS g_flag,
                CAST(grouping(l_linestatus) AS INT) AS g_status,
@@ -190,9 +184,7 @@ ORACLES_LATE: dict[str, str] = {
         GROUP BY CUBE (l_returnflag, l_linestatus)
         ORDER BY g_flag, g_status,
                  l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-}
-QUERIES_LATE = {"cube_revenue": cube_revenue_q}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +212,7 @@ def grouping_sets_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["grouping_sets_revenue"] = """
+query("grouping_sets_revenue", grouping_sets_revenue_q, """
     SELECT l_returnflag, l_linestatus, count(*) AS n,
            CAST(grouping(l_returnflag) AS INT) AS g_flag,
            CAST(grouping(l_linestatus) AS INT) AS g_status,
@@ -229,5 +221,4 @@ ORACLES_LATE["grouping_sets_revenue"] = """
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     ORDER BY g_flag, g_status,
              l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-"""
-QUERIES_LATE["grouping_sets_revenue"] = grouping_sets_revenue_q
+""")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 TOP_K = 10
@@ -277,8 +278,7 @@ def _sql_lsh_buckets(n_planes: int = N_HYPERPLANES, dim: int = 64) -> str:
     """
 
 
-ORACLES: dict[str, str] = {
-    "ann_cosine_topk": f"""
+query("ann_cosine_topk", ann_cosine_topk_q, f"""
         WITH n AS (SELECT vec_id, label, embedding,
                           sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                    FROM embeddings),
@@ -296,8 +296,9 @@ ORACLES: dict[str, str] = {
               FROM scored)
         WHERE rank <= {TOP_K}
         ORDER BY query_id, rank
-    """,
-    "ann_ivf_topk": f"""
+    """)
+
+query("ann_ivf_topk", ann_ivf_topk_q, f"""
         WITH n AS (SELECT vec_id, embedding,
                           sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                    FROM embeddings),
@@ -333,16 +334,9 @@ ORACLES: dict[str, str] = {
               FROM scored)
         WHERE rank <= 5
         ORDER BY query_id, rank
-    """,
-}
+    """)
 
-ORACLES["ann_lsh_bucket"] = _sql_lsh_buckets()
-
-QUERIES = {
-    "ann_cosine_topk": ann_cosine_topk_q,
-    "ann_ivf_topk": ann_ivf_topk_q,
-    "ann_lsh_bucket": ann_lsh_bucket_q,
-}
+query("ann_lsh_bucket", ann_lsh_bucket_q, _sql_lsh_buckets())
 
 
 # --------------------------------------------------------------------------
@@ -412,10 +406,8 @@ _QDOT_SQL = (
     "(acc, x) -> acc + x)"
 )
 
-ORACLES_LATE: dict[str, str] = {}
-QUERIES_LATE: dict = {}
 
-ORACLES_LATE["ann_quantized_topk"] = f"""
+query("ann_quantized_topk", ann_quantized_topk_q, f"""
     WITH n AS (SELECT vec_id, embedding,
                       sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                FROM embeddings),
@@ -437,8 +429,7 @@ ORACLES_LATE["ann_quantized_topk"] = f"""
           FROM scored)
     WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
-"""
-QUERIES_LATE["ann_quantized_topk"] = ann_quantized_topk_q
+""")
 
 
 def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,7 +485,7 @@ def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["ann_ivf_quantized_topk"] = f"""
+query("ann_ivf_quantized_topk", ann_ivf_quantized_topk_q, f"""
     WITH n AS (SELECT vec_id, embedding,
                       sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                FROM embeddings),
@@ -534,5 +525,4 @@ ORACLES_LATE["ann_ivf_quantized_topk"] = f"""
           FROM scored)
     WHERE rank <= 5
     ORDER BY query_id, rank
-"""
-QUERIES_LATE["ann_ivf_quantized_topk"] = ann_ivf_quantized_topk_q
+""")

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -55,7 +56,8 @@ def _h60(col: Column) -> Column:
 
 _HLL_M = 256  # 2^8 registers
 # alpha_m * m^2 * 2^53 assembled from the same literals in both
-# engines (see ORACLES_LATE) so the double arithmetic is bit-identical.
+# engines (see the hll_distinct_users oracle) so the double
+# arithmetic is bit-identical.
 
 def hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog cardinality of events.user_id with integer-exact
@@ -300,14 +302,7 @@ def weighted_priority_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE = {
-    "hll_distinct_users": hll_distinct_users_q,
-    "bloom_decontaminate": bloom_decontaminate_q,
-    "weighted_priority_sample": weighted_priority_sample_q,
-}
-
-ORACLES_LATE: dict[str, str] = {
-    "hll_distinct_users": f"""
+query("hll_distinct_users", hll_distinct_users_q, f"""
         WITH hashed AS (
             SELECT CAST(('0x' || substr(md5('u' || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
             FROM events
@@ -345,8 +340,9 @@ ORACLES_LATE: dict[str, str] = {
                  END + 1e-9, 2) AS est,
                exact_distinct
         FROM folded, exact
-    """,
-    "bloom_decontaminate": f"""
+    """)
+
+query("bloom_decontaminate", bloom_decontaminate_q, f"""
         WITH grams AS (
             SELECT doc_id, source,
                    unnest(list_transform(
@@ -410,8 +406,9 @@ ORACLES_LATE: dict[str, str] = {
                CAST(sum(CASE WHEN n_bloom > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged_docs
         FROM per_doc
         GROUP BY source ORDER BY source
-    """,
-    "weighted_priority_sample": f"""
+    """)
+
+query("weighted_priority_sample", weighted_priority_sample_q, f"""
         WITH keyed AS (
             SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
                    -ln((CAST(('0x' || substr(md5('ws' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
@@ -425,8 +422,7 @@ ORACLES_LATE: dict[str, str] = {
                doc_id, weight,
                round(k_full + 1e-12, 6) AS clock_key
         FROM top ORDER BY rank
-    """,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -471,7 +467,7 @@ def zorder_cluster_events_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["zorder_cluster_events"] = """
+query("zorder_cluster_events", zorder_cluster_events_q, """
     WITH keyed AS (
         SELECT user_id % 65536 AS k1,
                least(CAST(floor(value * 10) AS BIGINT), 65535) AS k2
@@ -490,8 +486,7 @@ ORACLES_LATE["zorder_cluster_events"] = """
            CAST(max(k2) AS BIGINT) AS k2_max
     FROM zed
     GROUP BY z_block ORDER BY z_block
-"""
-QUERIES_LATE["zorder_cluster_events"] = zorder_cluster_events_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -595,7 +590,7 @@ _CMS_CELL_SQL = (
     "|| CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % {w}"
 )
 
-ORACLES_LATE["cms_heavy_hitters"] = f"""
+query("cms_heavy_hitters", cms_heavy_hitters_q, f"""
     WITH hits AS (
         SELECT r, {_CMS_CELL_SQL.format(r='r', w=_CMS_W)} AS c
         FROM events CROSS JOIN (SELECT unnest(range({_CMS_D})) AS r)
@@ -620,8 +615,7 @@ ORACLES_LATE["cms_heavy_hitters"] = f"""
           FROM est)
     WHERE rank <= {_CMS_TOP}
     ORDER BY rank
-"""
-QUERIES_LATE["cms_heavy_hitters"] = cms_heavy_hitters_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -718,7 +712,7 @@ def histogram_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "q_label")
 
 
-ORACLES_LATE["histogram_quantiles"] = f"""
+query("histogram_quantiles", histogram_quantiles_q, f"""
     WITH stats AS (SELECT min(value) AS mn, max(value) AS mx FROM events),
     binned AS (
         SELECT event_type, mn, mx,
@@ -758,5 +752,4 @@ ORACLES_LATE["histogram_quantiles"] = f"""
                  6) AS est_value
     FROM hit WHERE rn = 1
     ORDER BY event_type, q_label
-"""
-QUERIES_LATE["histogram_quantiles"] = histogram_quantiles_q
+""")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 # Stopword lists for the n-gram/stopword language-ID heuristic. The
@@ -285,8 +286,31 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-ORACLES_LATE: dict[str, str] = {
-    "repetition_quality": f"""
+query("vocab_doc_freq", vocab_doc_freq_q, f"""
+        WITH w AS (
+            SELECT doc_id,
+                   lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+            FROM documents)
+        SELECT term, count(*) AS term_freq,
+               count(DISTINCT doc_id) AS doc_freq
+        FROM w GROUP BY term
+        ORDER BY term_freq DESC, term LIMIT {VOCAB_TOP}
+    """)
+
+query("bigram_counts", bigram_counts_q, f"""
+        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+                   FROM documents),
+        p AS (SELECT doc_id,
+                     lower(unnest(list_transform(range(1, len(w)),
+                         i -> w[i] || ' ' || w[i + 1]))) AS bigram
+              FROM t)
+        SELECT bigram, count(*) AS pair_freq,
+               count(DISTINCT doc_id) AS doc_freq
+        FROM p GROUP BY bigram
+        ORDER BY pair_freq DESC, bigram LIMIT {VOCAB_TOP}
+    """)
+
+query("repetition_quality", repetition_quality_q, f"""
         WITH w AS (
             SELECT doc_id, lower(unnest(t)) AS term
             FROM (SELECT doc_id, {_sql_words()} AS t FROM documents)),
@@ -320,8 +344,9 @@ ORACLES_LATE: dict[str, str] = {
                (top_unigram_frac <= {REP_TOP_UNIGRAM_MAX}
                 AND dup_bigram_frac <= {REP_DUP_BIGRAM_MAX}) AS keep
         FROM j ORDER BY doc_id
-    """,
-    "pii_redact": f"""
+    """)
+
+query("pii_redact", pii_redact_q, f"""
         WITH c AS (
             SELECT doc_id,
                    text || ' contact user' || CAST(doc_id AS VARCHAR)
@@ -343,50 +368,21 @@ ORACLES_LATE: dict[str, str] = {
                CAST(length(redacted) AS INT) AS redacted_len,
                md5(redacted) AS redacted_md5
         FROM r ORDER BY doc_id
-    """,
-    "vocab_doc_freq": f"""
-        WITH w AS (
-            SELECT doc_id,
-                   lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
-            FROM documents)
-        SELECT term, count(*) AS term_freq,
-               count(DISTINCT doc_id) AS doc_freq
-        FROM w GROUP BY term
-        ORDER BY term_freq DESC, term LIMIT {VOCAB_TOP}
-    """,
-    "bigram_counts": f"""
-        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                   FROM documents),
-        p AS (SELECT doc_id,
-                     lower(unnest(list_transform(range(1, len(w)),
-                         i -> w[i] || ' ' || w[i + 1]))) AS bigram
-              FROM t)
-        SELECT bigram, count(*) AS pair_freq,
-               count(DISTINCT doc_id) AS doc_freq
-        FROM p GROUP BY bigram
-        ORDER BY pair_freq DESC, bigram LIMIT {VOCAB_TOP}
-    """,
-}
-
-QUERIES_LATE = {
-    "vocab_doc_freq": vocab_doc_freq_q,
-    "bigram_counts": bigram_counts_q,
-    "repetition_quality": repetition_quality_q,
-    "pii_redact": pii_redact_q,
-}
+    """)
 
 
 _STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
 
-ORACLES: dict[str, str] = {
-    "token_count": f"""
+
+query("token_count", token_count_q, f"""
         SELECT doc_id,
                CAST(len({_sql_words()}) AS INT) AS n_words,
                CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est,
                CAST(length(text) AS INT) AS n_chars_actual
         FROM documents ORDER BY doc_id
-    """,
-    "quality_score": f"""
+    """)
+
+query("quality_score", quality_score_q, f"""
         WITH q AS (
             SELECT doc_id,
                    CAST(len(w) AS DOUBLE) AS n_words,
@@ -404,8 +400,9 @@ ORACLES: dict[str, str] = {
                      + 1e-9, 4)
                    AS quality_score
         FROM q ORDER BY doc_id
-    """,
-    "language_id": """
+    """)
+
+query("language_id", language_id_q, """
         WITH w AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS words
                    FROM documents),
         hits AS (
@@ -427,8 +424,9 @@ ORACLES: dict[str, str] = {
                CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
                CAST(sum(CASE WHEN pred_lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_en
         FROM pred GROUP BY lang ORDER BY lang
-    """,
-    "fingerprint": f"""
+    """)
+
+query("fingerprint", fingerprint_q, f"""
         WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                    FROM documents),
         terms AS (
@@ -445,15 +443,7 @@ ORACLES: dict[str, str] = {
                md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS content_md5,
                fp.rolling_hash
         FROM documents d JOIN fp USING (doc_id) ORDER BY d.doc_id
-    """,
-}
-
-QUERIES = {
-    "token_count": token_count_q,
-    "quality_score": quality_score_q,
-    "language_id": language_id_q,
-    "fingerprint": fingerprint_q,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -508,7 +498,7 @@ def unigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["unigram_logprob"] = f"""
+query("unigram_logprob", unigram_logprob_q, f"""
     WITH words AS (
         SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
         FROM documents),
@@ -528,8 +518,7 @@ ORACLES_LATE["unigram_logprob"] = f"""
            round(sum_micro / 1e6 / n_words + 1e-9, 4)
                BETWEEN {NLL_BAND_LO} AND {NLL_BAND_HI} AS keep
     FROM per_doc ORDER BY doc_id
-"""
-QUERIES_LATE["unigram_logprob"] = unigram_logprob_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -585,7 +574,7 @@ def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["tfidf_topterms"] = f"""
+query("tfidf_topterms", tfidf_topterms_q, f"""
     WITH w AS (
         SELECT doc_id,
                lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
@@ -607,8 +596,7 @@ ORACLES_LATE["tfidf_topterms"] = f"""
           FROM scored)
     SELECT doc_id, CAST(rank AS INT) AS rank, term, tf, score_micro
     FROM r WHERE rank <= {TFIDF_TOP} ORDER BY doc_id, rank
-"""
-QUERIES_LATE["tfidf_topterms"] = tfidf_topterms_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -684,7 +672,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["gopher_rules"] = f"""
+query("gopher_rules", gopher_rules_q, f"""
     WITH base AS (
         SELECT doc_id, source, {_sql_words()} AS ws, text FROM documents
     ),
@@ -721,8 +709,7 @@ ORACLES_LATE["gopher_rules"] = f"""
                           AND p_top = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
     FROM flags
     GROUP BY source ORDER BY source
-"""
-QUERIES_LATE["gopher_rules"] = gopher_rules_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -932,10 +919,9 @@ def _bpe_apply_oracle_sql(k: int) -> str:
     FROM seq{k} GROUP BY 1 ORDER BY n_tokens"""
 
 
-ORACLES_LATE["bpe_merges"] = _bpe_oracle_sql(BPE_MERGES)
-QUERIES_LATE["bpe_merges"] = bpe_merges_q
-ORACLES_LATE["bpe_tokenize_apply"] = _bpe_apply_oracle_sql(BPE_MERGES)
-QUERIES_LATE["bpe_tokenize_apply"] = bpe_tokenize_apply_q
+query("bpe_merges", bpe_merges_q, _bpe_oracle_sql(BPE_MERGES))
+query("bpe_tokenize_apply", bpe_tokenize_apply_q,
+      _bpe_apply_oracle_sql(BPE_MERGES))
 
 
 # --------------------------------------------------------------------------
@@ -1009,7 +995,7 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["bigram_logprob"] = f"""
+query("bigram_logprob", bigram_logprob_q, f"""
     WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
                FROM documents),
     words AS (SELECT doc_id, unnest(ws) AS w1 FROM t),
@@ -1044,5 +1030,4 @@ ORACLES_LATE["bigram_logprob"] = f"""
            round(sum_micro / 1e6 / n_scored + 1e-9, 4)
                BETWEEN {BIGRAM_NLL_LO} AND {BIGRAM_NLL_HI} AS keep
     FROM per_doc ORDER BY doc_id
-"""
-QUERIES_LATE["bigram_logprob"] = bigram_logprob_q
+""")

@@ -14,8 +14,8 @@ partial aggregation, and fact-fact joins on orderkey, which AQE
 skew-splits. region/nation/customer/supplier/part stay broadcast
 (≤ ~150 MB even at sf1000 for region/nation/supplier).
 
-Each SPARK operator has a matching entry in ORACLES (ANSI SQL for
-DuckDB) — same aliases, same rounding, same ordering keys.
+Each SPARK operator is registered with a matching DuckDB oracle
+(ANSI SQL) — same aliases, same rounding, same ordering keys.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
 
@@ -543,8 +544,8 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # DuckDB oracle SQL — same aliases, same rounding, same predicates.
 # --------------------------------------------------------------------------
-ORACLES: dict[str, str] = {
-    "q1_pricing_summary": """
+
+query("q1_pricing_summary", q1_pricing_summary, """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2)                                        AS sum_qty,
                round(sum(l_extendedprice), 2)                                   AS sum_base_price,
@@ -558,8 +559,9 @@ ORACLES: dict[str, str] = {
         WHERE l_shipdate <= TIMESTAMP '2000-12-01'
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
-    """,
-    "q3_shipping_priority": """
+    """)
+
+query("q3_shipping_priority", q3_shipping_priority, """
         SELECT l_orderkey,
                CAST(o_orderdate AS DATE) AS o_orderdate,
                o_orderpriority,
@@ -573,8 +575,9 @@ ORACLES: dict[str, str] = {
         GROUP BY l_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
         ORDER BY revenue DESC, o_orderdate, l_orderkey
         LIMIT 10
-    """,
-    "q4_order_priority": """
+    """)
+
+query("q4_order_priority", q4_order_priority, """
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders o
         WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -584,8 +587,9 @@ ORACLES: dict[str, str] = {
                         AND l.l_shipdate > o.o_orderdate)
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-    """,
-    "q5_local_supplier_volume": """
+    """)
+
+query("q5_local_supplier_volume", q5_local_supplier_volume, """
         SELECT n_name,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         FROM lineitem
@@ -600,8 +604,9 @@ ORACLES: dict[str, str] = {
           AND o_orderdate <  TIMESTAMP '1997-01-01'
         GROUP BY n_name
         ORDER BY revenue DESC, n_name
-    """,
-    "q6_forecast_revenue": """
+    """)
+
+query("q6_forecast_revenue", q6_forecast_revenue, """
         SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
                count(*) AS n_items
         FROM lineitem
@@ -609,8 +614,9 @@ ORACLES: dict[str, str] = {
           AND l_shipdate <  TIMESTAMP '1998-01-01'
           AND l_discount >= 0.03 AND l_discount <= 0.07
           AND l_quantity < 24
-    """,
-    "q7_volume_shipping": """
+    """)
+
+query("q7_volume_shipping", q7_volume_shipping, """
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS INT) AS l_year,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -626,8 +632,9 @@ ORACLES: dict[str, str] = {
             OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
         GROUP BY supp_nation, cust_nation, l_year
         ORDER BY supp_nation, cust_nation, l_year
-    """,
-    "q9_product_profit": """
+    """)
+
+query("q9_product_profit", q9_product_profit, """
         SELECT n_name AS nation,
                CAST(year(o_orderdate) AS INT) AS o_year,
                round(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
@@ -640,8 +647,9 @@ ORACLES: dict[str, str] = {
         WHERE p_type = 'PROMO'
         GROUP BY n_name, year(o_orderdate)
         ORDER BY n_name, o_year DESC
-    """,
-    "q10_returned_items": """
+    """)
+
+query("q10_returned_items", q10_returned_items, """
         SELECT c_custkey, c_name, c_acctbal, n_name,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         FROM lineitem
@@ -654,8 +662,9 @@ ORACLES: dict[str, str] = {
         GROUP BY c_custkey, c_name, c_acctbal, n_name
         ORDER BY revenue DESC, c_custkey
         LIMIT 20
-    """,
-    "q12_priority_lines": """
+    """)
+
+query("q12_priority_lines", q12_priority_lines, """
         SELECT l_linestatus,
                CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
                CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
@@ -665,8 +674,9 @@ ORACLES: dict[str, str] = {
           AND l_shipdate <  TIMESTAMP '1999-01-01'
         GROUP BY l_linestatus
         ORDER BY l_linestatus
-    """,
-    "q14_promo_effect": """
+    """)
+
+query("q14_promo_effect", q14_promo_effect, """
         SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
                                       THEN l_extendedprice * (1 - l_discount)
                                       ELSE 0.0 END)
@@ -674,8 +684,9 @@ ORACLES: dict[str, str] = {
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1997-09-01'
           AND l_shipdate <  TIMESTAMP '1997-10-01'
-    """,
-    "q18_large_volume_customers": """
+    """)
+
+query("q18_large_volume_customers", q18_large_volume_customers, """
         SELECT c_name, c_custkey, o_orderkey,
                CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice,
                round(total_qty, 2) AS total_qty
@@ -686,8 +697,18 @@ ORACLES: dict[str, str] = {
         JOIN customer ON o_custkey = c_custkey
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 100
-    """,
-    "q8_market_share": """
+    """)
+
+query("q19_disjunctive_revenue", q19_disjunctive_revenue, """
+        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               count(*) AS n_items
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1  AND 11 AND p_size BETWEEN 1 AND 5)
+           OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
+           OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)
+    """)
+
+query("q8_market_share", q8_market_share, """
         SELECT CAST(year(o_orderdate) AS INT) AS o_year,
                round(sum(CASE WHEN n2.n_name = 'NATION_1'
                               THEN l_extendedprice * (1 - l_discount)
@@ -703,8 +724,9 @@ ORACLES: dict[str, str] = {
         JOIN nation n2 ON s_nationkey = n2.n_nationkey
         WHERE r_name = 'ASIA'
         GROUP BY o_year ORDER BY o_year
-    """,
-    "q13_customer_distribution": """
+    """)
+
+query("q13_customer_distribution", q13_customer_distribution, """
         SELECT c_count, count(*) AS custdist
         FROM (SELECT c_custkey, count(o_orderkey) AS c_count
               FROM customer
@@ -713,8 +735,9 @@ ORACLES: dict[str, str] = {
               GROUP BY c_custkey)
         GROUP BY c_count
         ORDER BY custdist DESC, c_count DESC
-    """,
-    "q15_top_supplier": """
+    """)
+
+query("q15_top_supplier", q15_top_supplier, """
         WITH rev AS (
             SELECT l_suppkey,
                    round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
@@ -726,8 +749,9 @@ ORACLES: dict[str, str] = {
         FROM rev JOIN supplier ON l_suppkey = s_suppkey
         WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
         ORDER BY s_suppkey
-    """,
-    "q17_small_quantity": """
+    """)
+
+query("q17_small_quantity", q17_small_quantity, """
         SELECT round(sum(l_extendedprice) / 7.0 + 1e-9, 2) AS avg_yearly,
                count(*) AS n_items
         FROM lineitem
@@ -735,8 +759,9 @@ ORACLES: dict[str, str] = {
         JOIN (SELECT l_partkey AS ap_key, avg(l_quantity) AS avg_qty
               FROM lineitem GROUP BY l_partkey) a ON l_partkey = ap_key
         WHERE p_brand = 'Brand#23' AND l_quantity < 0.2 * avg_qty
-    """,
-    "q21_waiting_supplier": """
+    """)
+
+query("q21_waiting_supplier", q21_waiting_supplier, """
         WITH li AS (
             SELECT l_orderkey, l_suppkey, l_shipdate
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -754,8 +779,9 @@ ORACLES: dict[str, str] = {
         GROUP BY s_name
         ORDER BY numwait DESC, s_name
         LIMIT 20
-    """,
-    "q22_global_sales_opportunity": """
+    """)
+
+query("q22_global_sales_opportunity", q22_global_sales_opportunity, """
         SELECT c_nationkey % 5 AS cntrycode, count(*) AS numcust,
                round(sum(c_acctbal), 2) AS totacctbal
         FROM customer
@@ -765,37 +791,7 @@ ORACLES: dict[str, str] = {
                           WHERE o_custkey = c_custkey
                             AND o_orderdate >= TIMESTAMP '1999-01-01')
         GROUP BY cntrycode ORDER BY cntrycode
-    """,
-    "q19_disjunctive_revenue": """
-        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_items
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1  AND 11 AND p_size BETWEEN 1 AND 5)
-           OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
-           OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)
-    """,
-}
-
-QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q4_order_priority": q4_order_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q9_product_profit": q9_product_profit,
-    "q10_returned_items": q10_returned_items,
-    "q12_priority_lines": q12_priority_lines,
-    "q14_promo_effect": q14_promo_effect,
-    "q18_large_volume_customers": q18_large_volume_customers,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q8_market_share": q8_market_share,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q17_small_quantity": q17_small_quantity,
-    "q21_waiting_supplier": q21_waiting_supplier,
-    "q22_global_sales_opportunity": q22_global_sales_opportunity,
-}
+    """)
 
 
 # --------------------------------------------------------------------------
@@ -956,7 +952,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q2_min_cost_supplier"] = """
+query("q2_min_cost_supplier", q2_min_cost_supplier, """
     WITH ps AS (
         SELECT l_partkey, l_suppkey,
                min(l_extendedprice / l_quantity) AS supplycost
@@ -978,9 +974,8 @@ ORACLES["q2_min_cost_supplier"] = """
                AND p.p_size <= 15 AND p.p_type = 'STANDARD'
     ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, p.p_partkey
     LIMIT 20
-"""
-
-ORACLES["q11_important_stock"] = f"""
+""")
+query("q11_important_stock", q11_important_stock, f"""
     WITH v AS (
         SELECT l_partkey,
                CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
@@ -995,9 +990,8 @@ ORACLES["q11_important_stock"] = f"""
     FROM v CROSS JOIN tot
     WHERE cents * {Q11_SHARE_MULT} > total
     ORDER BY value DESC, ps_partkey
-"""
-
-ORACLES["q16_supplier_part_counts"] = f"""
+""")
+query("q16_supplier_part_counts", q16_supplier_part_counts, f"""
     WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
     SELECT p.p_brand, p.p_type, p.p_size,
            CAST(count(DISTINCT pr.l_suppkey) AS BIGINT) AS supplier_cnt
@@ -1009,9 +1003,8 @@ ORACLES["q16_supplier_part_counts"] = f"""
           (SELECT s_suppkey FROM supplier WHERE s_suppkey % 13 = 0)
     GROUP BY 1, 2, 3
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
-"""
-
-ORACLES["q20_potential_promotion"] = f"""
+""")
+query("q20_potential_promotion", q20_potential_promotion, f"""
     WITH red_parts AS (SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
     shipped AS (
         SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
@@ -1027,9 +1020,4 @@ ORACLES["q20_potential_promotion"] = f"""
     JOIN heavy h ON s.s_suppkey = h.l_suppkey
     JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_regionkey = 2
     ORDER BY s.s_name
-"""
-
-QUERIES["q2_min_cost_supplier"] = q2_min_cost_supplier
-QUERIES["q11_important_stock"] = q11_important_stock
-QUERIES["q16_supplier_part_counts"] = q16_supplier_part_counts
-QUERIES["q20_potential_promotion"] = q20_potential_promotion
+""")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from debezium_spark.registry import query
+
 IBMI_OP_MAP = {"PT": "c", "PX": "c", "UP": "u", "DL": "d", "DR": "d"}
 
 
@@ -285,21 +287,15 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL  # noqa: E402
 
-ORACLES_LATE: dict[str, str] = {
-    "ibmi_journal_roundtrip": _CDC_FLAT_SQL
-    + """
+
+query("ibmi_journal_roundtrip", ibmi_journal_roundtrip_q, _CDC_FLAT_SQL + """
         SELECT op, count(*) AS n_events,
                min(seq * 2) AS min_joseqn,
                max(seq * 2) AS max_joseqn,
                CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                     AS BIGINT) AS sum_after_cents
         FROM cdc GROUP BY op ORDER BY op
-    """,
-}
-
-QUERIES_LATE = {
-    "ibmi_journal_roundtrip": ibmi_journal_roundtrip_q,
-}
+    """)
 
 
 def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -340,15 +336,14 @@ def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + """
+query("mysql_binlog_roundtrip", mysql_binlog_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 10000000000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 10000000000 + seq % 100000) AS max_seq,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["mysql_binlog_roundtrip"] = mysql_binlog_roundtrip_q
+""")
 
 
 def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -389,14 +384,14 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mongo_change_stream_roundtrip"] = _CDC_FLAT_SQL + """
+query("mongo_change_stream_roundtrip", mongo_change_stream_roundtrip_q,
+      _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_seq,
            max(seq) AS max_seq,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["mongo_change_stream_roundtrip"] = mongo_change_stream_roundtrip_q
+""")
 
 
 def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -429,15 +424,14 @@ def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+query("cassandra_cdc_roundtrip", cassandra_cdc_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT CASE WHEN op = 'd' THEN 'd' ELSE 'u' END AS op,
            count(*) AS n_events, count(DISTINCT key) AS n_keys,
            max(seq * 1000) AS max_writetime_us,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY 1 ORDER BY op
-"""
-QUERIES_LATE["cassandra_cdc_roundtrip"] = cassandra_cdc_roundtrip_q
+""")
 
 
 def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -475,14 +469,13 @@ def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pg_wal_roundtrip"] = _CDC_FLAT_SQL + """
+query("pg_wal_roundtrip", pg_wal_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
            CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_before_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["pg_wal_roundtrip"] = pg_wal_roundtrip_q
+""")
 
 
 def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -523,14 +516,13 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["spanner_roundtrip"] = _CDC_FLAT_SQL + """
+query("spanner_roundtrip", spanner_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            max(ts_ms * 1000 + seq % 1000) AS max_seq,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["spanner_roundtrip"] = spanner_roundtrip_q
+""")
 
 
 def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -573,14 +565,14 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["oracle_logminer_roundtrip"] = _CDC_FLAT_SQL + """
+query("oracle_logminer_roundtrip", oracle_logminer_roundtrip_q,
+      _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_scn,
            max(seq) AS max_scn,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["oracle_logminer_roundtrip"] = oracle_logminer_roundtrip_q
+""")
 
 
 def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -618,14 +610,14 @@ def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["vitess_vstream_roundtrip"] = _CDC_FLAT_SQL + """
+query("vitess_vstream_roundtrip", vitess_vstream_roundtrip_q,
+      _CDC_FLAT_SQL + """
     SELECT 'commerce' AS keyspace,
            '-' || CAST(key % 4 AS VARCHAR) AS shard, op,
            count(*) AS n_events,
            max((key % 4) * 10000000000 + seq) AS max_seq
     FROM cdc GROUP BY 1, 2, 3 ORDER BY shard, op
-"""
-QUERIES_LATE["vitess_vstream_roundtrip"] = vitess_vstream_roundtrip_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -714,7 +706,7 @@ def sqlserver_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+query("sqlserver_cdc_roundtrip", sqlserver_cdc_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
            CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
@@ -722,8 +714,7 @@ ORACLES_LATE["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["sqlserver_cdc_roundtrip"] = sqlserver_cdc_roundtrip_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -796,7 +787,7 @@ def db2_cd_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
+query("db2_cd_roundtrip", db2_cd_roundtrip_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 100000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 100000 + seq % 100000) AS max_seq,
@@ -805,8 +796,7 @@ ORACLES_LATE["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["db2_cd_roundtrip"] = db2_cd_roundtrip_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -912,7 +902,7 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
+query("ibmi_commitment_control", ibmi_commitment_control_q, _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            count(DISTINCT seq // 100) AS n_cycles,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
@@ -920,5 +910,4 @@ ORACLES_LATE["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
     FROM cdc
     WHERE (seq // 100) % 7 <> 3 AND (seq // 100) % 11 <> 5
     GROUP BY op ORDER BY op
-"""
-QUERIES_LATE["ibmi_commitment_control"] = ibmi_commitment_control_q
+""")

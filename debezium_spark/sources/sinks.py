@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_spark.registry import query
+
 
 def sink_to_topics(df: DataFrame, out_dir: str, topic_col: str = "topic") -> None:
     """Partition the sink layout by topic: consumers of one topic scan
@@ -274,5 +276,4 @@ BUCKETED_JOIN_ORACLE = """
     GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
 """
 
-QUERIES_LATE = {"bucketed_join_agg": bucketed_join_agg_q}
-ORACLES_LATE = {"bucketed_join_agg": BUCKETED_JOIN_ORACLE}
+query("bucketed_join_agg", bucketed_join_agg_q, BUCKETED_JOIN_ORACLE)

@@ -25,12 +25,67 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
+from debezium_spark.cdc.materialize import CDC_LATEST_STATE_SQL
+from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
+
+
+def _gate_replay(
+    spark: SparkSession,
+    prefix: str,
+    build: Callable[[str, Callable[[DataFrame, str], DataFrame]], DataFrame],
+) -> DataFrame:
+    """Gate-only harness, not a production path. Runs
+    `build(workdir, drain)` in a fresh temp dir, where
+    `drain(stream_df, output_mode)` replays a stream to completion
+    into a memory sink and returns the sink's table. The frame `build`
+    returns is collected into a driver-local frame, so the answer
+    outlives the cleanup: every memory-sink temp view is dropped (each
+    would otherwise hold its rows in driver memory for the rest of the
+    session) and the temp dir is deleted. Production ingest writes to
+    a durable sink instead (`streaming_latest_state_manifest`)."""
+    workdir = tempfile.mkdtemp(prefix=prefix)
+    views: list[str] = []
+
+    def drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
+        name = f"{prefix}{uuid.uuid4().hex[:8]}"
+        views.append(name)
+        q = (
+            stream_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return spark.table(name)
+
+    try:
+        out = build(workdir, drain)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _file_stream(spark: SparkSession, topic: str) -> DataFrame:
+    """One file per trigger over a staged parquet 'topic' directory."""
+    schema = spark.read.parquet(topic).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(topic)
+    )
 
 
 def stage_stream_dir(spark: SparkSession, sf_dir: str, table: str,
@@ -46,44 +101,59 @@ def stage_stream_dir(spark: SparkSession, sf_dir: str, table: str,
 
 def read_event_stream(spark: SparkSession, sf_dir: str, workdir: str) -> DataFrame:
     """File-source stream over the events table (stand-in for Kafka)."""
-    topic = stage_stream_dir(spark, sf_dir, "events", workdir)
-    schema = spark.read.parquet(topic).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(topic)
+    return _file_stream(spark, stage_stream_dir(spark, sf_dir, "events", workdir))
+
+
+def _stage_cdc_topic(spark: SparkSession, sf_dir: str, workdir: str) -> str:
+    """Write the synthesized change stream as a 4-file 'topic'."""
+    topic = os.path.join(workdir, "topic")
+    synthesize_cdc_flat(spark, sf_dir).repartition(4, "key").write.mode(
+        "overwrite"
+    ).parquet(topic)
+    return topic
+
+
+def _live_state(state: DataFrame) -> DataFrame:
+    """Materialized state without tombstones, in cdc_latest_state's
+    columns."""
+    return state.filter(F.col("op") != "d").select(
+        "key",
+        F.col("after_totalprice").alias("o_totalprice"),
+        "o_custkey",
+        "o_orderstatus",
+        "o_orderpriority",
+        "seq",
     )
 
 
 def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-hour aggregation, replayed to completion
     through a memory sink. Deterministic → oracle-checkable."""
-    workdir = tempfile.mkdtemp(prefix="evt_stream_")
-    events = read_event_stream(spark, sf_dir, workdir)
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"""SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS window_start,
-                   event_type, n, total_value FROM {name}"""
-    ).orderBy("window_start", "event_type")
-    return spark.createDataFrame(out.collect(), out.schema)
+
+    def build(workdir, drain):
+        agg = (
+            read_event_stream(spark, sf_dir, workdir)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
+        )
+        return drain(agg, "complete").select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type", "n", "total_value",
+        ).orderBy("window_start", "event_type")
+
+    return _gate_replay(spark, "evt_stream_", build)
+
+
+query("stream_windowed_counts", stream_windowed_counts_q, """
+        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
+                   AS window_start,
+               event_type,
+               count(*) AS n, round(sum(value), 2) AS total_value
+        FROM events GROUP BY window_start, event_type
+        ORDER BY window_start, event_type
+    """)
 
 
 def streaming_latest_state(
@@ -203,35 +273,14 @@ def stream_cdc_bucketed_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same end-to-end contract as stream_cdc_latest_state but through
     the bucket-incremental sink — must converge to the identical batch
     latest-state oracle."""
-    workdir = tempfile.mkdtemp(prefix="cdc_bstream_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic_dir)
-        )
+
+    def build(workdir, drain):
+        state_root = os.path.join(workdir, "state")
+        stream = _file_stream(spark, _stage_cdc_topic(spark, sf_dir, workdir))
         streaming_latest_state_bucketed(spark, stream, state_root)
-        final = (
-            spark.read.parquet(state_root)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return _live_state(spark.read.parquet(state_root))
+
+    return _gate_replay(spark, "cdc_bstream_", build)
 
 
 def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,35 +288,21 @@ def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     'topic' → file-source readStream (one file per trigger, arbitrary
     order) → foreachBatch merge → final materialized state. Must equal
     the batch cdc_latest_state oracle exactly."""
-    workdir = tempfile.mkdtemp(prefix="cdc_stream_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic_dir)
-        )
+
+    def build(workdir, drain):
+        state_root = os.path.join(workdir, "state")
+        stream = _file_stream(spark, _stage_cdc_topic(spark, sf_dir, workdir))
         final_path = streaming_latest_state(spark, stream, state_root)
-        final = (
-            spark.read.parquet(final_path)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return _live_state(spark.read.parquet(final_path))
+
+    return _gate_replay(spark, "cdc_stream_", build)
+
+
+# streaming replay must converge to the batch latest-state materialization
+query("stream_cdc_latest_state", stream_cdc_latest_state_q,
+      CDC_LATEST_STATE_SQL)
+query("stream_cdc_bucketed_state", stream_cdc_bucketed_state_q,
+      CDC_LATEST_STATE_SQL)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str,
@@ -276,59 +311,23 @@ def stream_session_windows(spark: SparkSession, sf_dir: str,
     session) event counts with a 30-minute inactivity gap — the
     streaming twin of analytics.sessionize_events (equivalence is
     tested)."""
-    workdir = tempfile.mkdtemp(prefix="sess_stream_")
-    events = read_event_stream(spark, sf_dir, workdir)
-    # no watermark: the replayed 'topic' files arrive in arbitrary
-    # order, so a watermark would drop whole files as late. Complete
-    # mode keeps all session state. A production unbounded stream
-    # (ordered source) adds .withWatermark to bound state.
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"SELECT user_id, sw.start AS session_start, n_events FROM {name}"
-    )
-    return spark.createDataFrame(out.collect(), out.schema)
 
+    def build(workdir, drain):
+        # no watermark: the replayed 'topic' files arrive in arbitrary
+        # order, so a watermark would drop whole files as late. Complete
+        # mode keeps all session state. A production unbounded stream
+        # (ordered source) adds .withWatermark to bound state.
+        agg = (
+            read_event_stream(spark, sf_dir, workdir)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+        )
+        return drain(agg, "complete").select(
+            "user_id", F.col("sw.start").alias("session_start"), "n_events"
+        )
 
-ORACLES: dict[str, str] = {
-    "stream_windowed_counts": """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
-                   AS window_start,
-               event_type,
-               count(*) AS n, round(sum(value), 2) AS total_value
-        FROM events GROUP BY window_start, event_type
-        ORDER BY window_start, event_type
-    """,
-    # identical to the batch latest-state oracle — streaming replay
-    # must converge to the same materialization
-    "stream_cdc_latest_state": None,  # filled below to share the SQL
-}
-
-from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES  # noqa: E402
-
-ORACLES["stream_cdc_latest_state"] = _MAT_ORACLES["cdc_latest_state"]
-ORACLES["stream_cdc_bucketed_state"] = _MAT_ORACLES["cdc_latest_state"]
-
-QUERIES = {
-    "stream_windowed_counts": stream_windowed_counts_q,
-    "stream_cdc_latest_state": stream_cdc_latest_state_q,
-    "stream_cdc_bucketed_state": stream_cdc_bucketed_state_q,
-}
+    return _gate_replay(spark, "sess_stream_", build)
 
 
 def stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,8 +347,7 @@ def stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
-ORACLES_LATE: dict[str, str] = {
-    "stream_sessionize": """
+query("stream_sessionize", stream_sessionize_q, """
         WITH flags AS (
             SELECT user_id, ts, event_id,
                    CASE WHEN lag(ts) OVER w IS NULL
@@ -369,12 +367,7 @@ ORACLES_LATE: dict[str, str] = {
                count(*) AS n_events
         FROM sess GROUP BY user_id, sid
         ORDER BY user_id, session_start
-    """,
-}
-
-QUERIES_LATE = {
-    "stream_sessionize": stream_sessionize_q,
-}
+    """)
 
 
 def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,8 +386,8 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     late. A live deployment ingesting near-real-time would use the
     tight production delay (minutes–hours); the 1-hour join range
     bound is what sizes the state either way."""
-    workdir = tempfile.mkdtemp(prefix="ssj_stream_")
-    try:
+
+    def build(workdir, drain):
         views = (
             read_event_stream(spark, sf_dir, workdir)
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -424,19 +417,8 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("p_ts") <= F.col("v_ts") + F.expr("interval 1 hour")),
             "inner",
         )
-        name = f"ssj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.table(name)
+        return (
+            drain(joined, "append")
             .groupBy(F.date_format(
                 F.date_trunc("hour", F.col("v_ts")),
                 "yyyy-MM-dd HH:mm:ss").alias("view_hour"))
@@ -449,12 +431,11 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("view_hour")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _gate_replay(spark, "ssj_stream_", build)
 
 
-ORACLES_LATE["stream_stream_join"] = """
+query("stream_stream_join", stream_stream_join_q, """
     WITH v AS (SELECT user_id, ts, event_id FROM events
                WHERE event_type = 'view'),
     p AS (SELECT user_id, ts, value FROM events
@@ -470,8 +451,7 @@ ORACLES_LATE["stream_stream_join"] = """
            CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
                AS purchase_cents
     FROM j GROUP BY 1 ORDER BY view_hour
-"""
-QUERIES_LATE["stream_stream_join"] = stream_stream_join_q
+""")
 
 
 def stream_stateful_running_counts_q(
@@ -485,27 +465,14 @@ def stream_stateful_running_counts_q(
     bit-exact and oracle-comparable."""
     from debezium_spark.streaming.state import running_user_counts
 
-    workdir = tempfile.mkdtemp(prefix="state_stream_")
-    try:
+    def build(workdir, drain):
         ev = read_event_stream(spark, sf_dir, workdir).withColumn(
             "value",
             F.round(F.col("value") * 100 + 1e-9).cast("double"),
         )
-        name = f"st_{uuid.uuid4().hex[:8]}"
-        q = (
-            running_user_counts(ev)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        out = (
-            spark.table(name)
+        return (
+            drain(running_user_counts(ev), "update")
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select(
@@ -515,20 +482,16 @@ def stream_stateful_running_counts_q(
             )
             .orderBy("user_id")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _gate_replay(spark, "state_stream_", build)
 
 
-ORACLES_LATE["stream_stateful_running_counts"] = """
+query("stream_stateful_running_counts", stream_stateful_running_counts_q, """
     SELECT user_id, count(*) AS n_events,
            CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
                AS total_cents
     FROM events GROUP BY user_id ORDER BY user_id
-"""
-QUERIES_LATE["stream_stateful_running_counts"] = (
-    stream_stateful_running_counts_q
-)
+""")
 
 
 def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,47 +504,28 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     not. Production streams bound the state with
     dropDuplicatesWithinWatermark; the bounded replay keeps full state
     on purpose."""
-    workdir = tempfile.mkdtemp(prefix="dedup_stream_")
-    try:
+
+    def build(workdir, drain):
         topic = os.path.join(workdir, "documents")
         docs = load_table(spark, sf_dir, "documents")
         docs.repartition(4).write.mode("overwrite").parquet(topic)
         docs.repartition(3).write.mode("append").parquet(topic)
-        schema = spark.read.parquet(topic).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic)
-        )
         norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        deduped = stream.select(
+        deduped = _file_stream(spark, topic).select(
             F.md5(norm).alias("content_md5")
         ).dropDuplicates(["content_md5"])
-        name = f"dd_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.table(name).agg(
+        return drain(deduped, "append").agg(
             F.count(F.lit(1)).alias("n_unique"),
             F.sum(
                 F.conv(F.substring("content_md5", 1, 15), 16, 10)
                 .cast("long") % 1000000007
             ).alias("content_hash_sum"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _gate_replay(spark, "dedup_stream_", build)
 
 
-ORACLES_LATE["stream_dedup_documents"] = """
+query("stream_dedup_documents", stream_dedup_documents_q, """
     WITH u AS (
         SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
                                            'g')) AS content_md5
@@ -590,8 +534,7 @@ ORACLES_LATE["stream_dedup_documents"] = """
            CAST(sum(CAST(('0x' || substr(content_md5, 1, 15)) AS BIGINT)
                     % 1000000007) AS BIGINT) AS content_hash_sum
     FROM u
-"""
-QUERIES_LATE["stream_dedup_documents"] = stream_dedup_documents_q
+""")
 
 
 def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,45 +548,33 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day topic against a dimension that fits in executor memory.
     Aggregation runs in complete mode over the enriched stream;
     money sums in integer cents (bit-exact gate)."""
-    workdir = tempfile.mkdtemp(prefix="enrich_stream_")
-    try:
-        events = read_event_stream(spark, sf_dir, workdir)
+
+    def build(workdir, drain):
         dim = load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
             "c_mktsegment",
         )
-        enriched = events.join(F.broadcast(dim), "user_id", "left")
+        enriched = read_event_stream(spark, sf_dir, workdir).join(
+            F.broadcast(dim), "user_id", "left"
+        )
         agg = enriched.groupBy("c_mktsegment", "event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 F.round(F.col("value") * 100 + 1e-9).cast("long")
             ).alias("value_cents"),
         )
-        name = f"enr_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.table(name).orderBy("c_mktsegment", "event_type")
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return drain(agg, "complete").orderBy("c_mktsegment", "event_type")
+
+    return _gate_replay(spark, "enr_stream_", build)
 
 
-ORACLES_LATE["stream_static_enrich"] = """
+query("stream_static_enrich", stream_static_enrich_q, """
     SELECT c.c_mktsegment, e.event_type, count(*) AS n,
            CAST(sum(CAST(round(e.value * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS value_cents
     FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2 ORDER BY c_mktsegment, event_type
-"""
-QUERIES_LATE["stream_static_enrich"] = stream_static_enrich_q
+""")
 
 
 def stream_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,38 +585,28 @@ def stream_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the tumbling case, just with 2× window keys. Replayed to
     completion through a memory sink (deterministic → exact oracle;
     complete mode because the file replay is historical, SURVEY §6)."""
-    workdir = tempfile.mkdtemp(prefix="evt_slide_")
-    events = read_event_stream(spark, sf_dir, workdir)
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(
-            F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
+
+    def build(workdir, drain):
+        agg = (
+            read_event_stream(spark, sf_dir, workdir)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .groupBy(
+                F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
         )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    name = f"slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"""SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS window_start,
-                   event_type, n, total_value FROM {name}"""
-    ).orderBy("window_start", "event_type")
-    return spark.createDataFrame(out.collect(), out.schema)
+        return drain(agg, "complete").select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type", "n", "total_value",
+        ).orderBy("window_start", "event_type")
+
+    return _gate_replay(spark, "evt_slide_", build)
 
 
-ORACLES_LATE["stream_sliding_counts"] = """
+query("stream_sliding_counts", stream_sliding_counts_q, """
     WITH exploded AS (
         SELECT unnest([
                    make_timestamp((epoch_us(ts) // 3600000000) * 3600000000),
@@ -700,8 +621,7 @@ ORACLES_LATE["stream_sliding_counts"] = """
     FROM exploded
     GROUP BY w_start, event_type
     ORDER BY window_start, event_type
-"""
-QUERIES_LATE["stream_sliding_counts"] = stream_sliding_counts_q
+""")
 
 
 # --------------------------------------------------------------------------
@@ -862,47 +782,26 @@ def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream epoch, and a checkpointed restart — must still
     converge to the batch latest-state oracle with no loss and no
     duplication."""
-    workdir = tempfile.mkdtemp(prefix="cdc_manifest_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    ckpt = os.path.join(workdir, "ckpt")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
 
-        def stream():
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .format("parquet")
-                .load(topic_dir)
-            )
-
+    def build(workdir, drain):
+        state_root = os.path.join(workdir, "state")
+        ckpt = os.path.join(workdir, "ckpt")
+        topic = _stage_cdc_topic(spark, sf_dir, workdir)
         # first run crashes before committing epoch 2; the restart
         # (same checkpoint) replays it and runs to completion
         try:
             _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
+                spark, _file_stream(spark, topic), state_root, ckpt,
+                crash_before_commit={2},
             )
         except Exception:
             pass  # the injected crash surfaces as a stream error
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
-        final = (
-            read_manifest_state(spark, state_root)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
+        _run_manifest_stream(
+            spark, _file_stream(spark, topic), state_root, ckpt, None
         )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return _live_state(read_manifest_state(spark, state_root))
+
+    return _gate_replay(spark, "cdc_manifest_", build)
 
 
 def _run_manifest_stream(
@@ -937,8 +836,7 @@ def _run_manifest_stream(
         q.stop()
 
 
-ORACLES_LATE["manifest_commit_state"] = _MAT_ORACLES["cdc_latest_state"]
-QUERIES_LATE["manifest_commit_state"] = manifest_commit_state_q
+query("manifest_commit_state", manifest_commit_state_q, CDC_LATEST_STATE_SQL)
 
 
 def compact_manifest_state(

@@ -46,6 +46,18 @@ def test_stream_windowed_counts_equals_batch(spark, sf_dir):
     assert got.agg(F.sum("n")).first()[0] == want.agg(F.sum("n")).first()[0]
 
 
+def test_memory_sink_views_do_not_outlive_the_query(spark, sf_dir):
+    """A memory sink's temp view holds its rows in driver memory for
+    the rest of the session; the gated replay must drop it."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    assert stream_windowed_counts_q(spark, sf_dir).count() > 0
+    assert temp_views() == before
+
+
 def test_out_of_order_delivery_converges(spark, sf_dir):
     """Adversarial replay: the topic's files arrive newest-first
     (descending seq). Max-seq-wins merging must still converge to the
