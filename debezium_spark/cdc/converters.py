@@ -155,6 +155,10 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DDL (here: every event past each key's initial create, seq%10
     >= 2). Latest-state over the merged stream: keys whose last event
     predates the DDL surface NULL."""
+    # imported here, not at the top, so materialize's entries keep
+    # registering after this module's (queries() lists import order)
+    from debezium_spark.cdc.materialize import latest_state
+
     cdc = synthesize_cdc_flat(spark, sf_dir).select(
         "key", "seq", "op", "o_orderstatus"
     )
@@ -163,11 +167,8 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = cdc.filter(ddl_applied).withColumn(
         "o_discount_pct", F.pmod(F.col("key"), F.lit(7))
     )
-    merged = apply_schema_evolution(old, new)
-    w = Window.partitionBy("key").orderBy(F.desc("seq"))
     return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "d"))
+        latest_state(apply_schema_evolution(old, new))
         .select(
             "key",
             F.col("seq").alias("last_seq"),

@@ -3,6 +3,11 @@ builds — latest-state tables (log compaction / last-write-wins), SCD2
 history, tombstones, snapshot⋈stream merge, DBLog incremental-snapshot
 de-duplication, transaction metadata, and heartbeat lag metrics.
 
+One rule decides which row a key keeps: `last_write_wins` (max seq
+per key, tombstones included). `latest_state` is that rule minus
+tombstones, and every other max-seq consumer (composite keys, re-keys,
+the JDBC sink, the streaming manifest sink) calls one of the two.
+
 Scale design: `latest_state` and `scd2` are each ONE hash shuffle on
 the primary key (window over partitionBy(key)); AQE splits skewed hot
 keys. At 100 TB of change events this is the minimal movement — no
@@ -31,13 +36,23 @@ STATE_COLS = ("o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority")
 # Latest-state materialization (log compaction): the row each key has
 # after replaying the log; keys whose final event is a delete vanish.
 # --------------------------------------------------------------------------
-def latest_state(cdc: DataFrame, key: str = "key", seq: str = "seq") -> DataFrame:
-    w = Window.partitionBy(key).orderBy(F.desc(seq))
+def last_write_wins(
+    df: DataFrame, key: str | list[str], seq: str = "seq"
+) -> DataFrame:
+    """The one rule for which row a key keeps: its max-`seq` row,
+    tombstones (op='d') included. `key` is a column name or a list of
+    names (a composite key)."""
+    keys = [key] if isinstance(key, str) else key
+    w = Window.partitionBy(*keys).orderBy(F.desc(seq))
     return (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") != "d"))
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def latest_state(cdc: DataFrame, key: str = "key", seq: str = "seq") -> DataFrame:
+    return last_write_wins(cdc, key, seq).filter(F.col("op") != "d")
 
 
 def cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,14 +481,7 @@ def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one composite key, so last-write-wins genuinely differs from the
     single-key path. One hash shuffle on the composite key."""
     cdc = synthesize_cdc_flat(spark, sf_dir).filter(F.col("op") != "d")
-    w = Window.partitionBy("o_custkey", "o_orderpriority").orderBy(
-        F.desc("seq")
-    )
-    latest = (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = last_write_wins(cdc, ["o_custkey", "o_orderpriority"])
     return latest.select(
         "o_custkey",
         "o_orderpriority",
@@ -575,13 +583,9 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = passthrough.unionByName(old_del).unionByName(new_create)
 
-    w = Window.partitionBy("key").orderBy(F.desc("seq"))
-    latest = (
-        stream.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "d"))
-    )
     return (
-        latest.filter(F.col("key") >= REKEY_OFFSET)
+        latest_state(stream)
+        .filter(F.col("key") >= REKEY_OFFSET)
         .select(
             F.col("key").alias("new_key"),
             (F.col("key") - REKEY_OFFSET).alias("orig_key"),
@@ -641,13 +645,7 @@ def jdbc_sink_apply(
 ) -> DataFrame:
     if delete_enabled:
         return latest_state(cdc, key, seq)
-    upserts = cdc.filter(F.col("op") != "d")
-    w = Window.partitionBy(key).orderBy(F.desc(seq))
-    return (
-        upserts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return last_write_wins(cdc.filter(F.col("op") != "d"), key, seq)
 
 
 def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.registry import query
@@ -436,8 +437,6 @@ query("mixture_weights", mixture_weights_q, f"""
 # window, one groupBy(source).
 # --------------------------------------------------------------------------
 def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
     # same generation law as the orders stream (envelope.py): 1-3
@@ -474,11 +473,8 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("after_text"),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("seq"))
-    live = (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") != "d"))
-        .select("doc_id", "source", F.col("after_text").alias("text"))
+    live = latest_state(cdc, "doc_id").select(
+        "doc_id", "source", F.col("after_text").alias("text")
     )
     toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
     return (

@@ -2,10 +2,13 @@
 
 Re-expresses Debezium's delivery loop in Spark terms: a file-source
 change stream (stand-in for the Kafka topic), watermarked windowed
-aggregation for event-time analytics, and a foreachBatch latest-state
-merge — the exactly-once upsert sink pattern (each microbatch is
-merged into a versioned state snapshot keyed by primary key, max-seq
-wins, so replays and out-of-order batches converge to the same state).
+aggregation for event-time analytics, and one durable state sink,
+`streaming_latest_state_manifest` — a foreachBatch merge where each
+microbatch folds into the hash buckets it touches (max-seq wins per
+key, `cdc.materialize.last_write_wins`) and commits a per-epoch
+manifest by atomic rename, so replays and out-of-order batches
+converge to the same state. `read_manifest_state` reads that state and
+`compact_manifest_state` consolidates it.
 
 The driver-gated wrappers replay the stream to completion with
 `processAllAvailable()` so results are deterministic and comparable to
@@ -13,25 +16,29 @@ the batch oracles — streaming latest-state must equal batch
 latest-state (tested), which is the Debezium at-least-once + idempotent
 -consumer contract.
 
-At scale: the merge shuffles only on `key` (one shuffle per batch);
-state snapshots are partitioned parquet; maxFilesPerTrigger bounds
-per-batch volume. applyInPandasWithState carries per-key running
-aggregates where event-time windows can't express the semantics.
+At scale: the merge shuffles only on `key` (one shuffle per batch)
+and rewrites only the buckets a batch touches; maxFilesPerTrigger
+bounds per-batch volume. applyInPandasWithState carries per-key
+running aggregates where event-time windows can't express the
+semantics.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
-from debezium_spark.cdc.materialize import CDC_LATEST_STATE_SQL
+from debezium_spark.cdc.materialize import CDC_LATEST_STATE_SQL, last_write_wins
 from debezium_spark.registry import query
 from debezium_spark.sources.tables import load_table
 
@@ -156,146 +163,39 @@ query("stream_windowed_counts", stream_windowed_counts_q, """
     """)
 
 
-def streaming_latest_state(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    key: str = "key",
-    seq: str = "seq",
-) -> str:
-    """foreachBatch merge: upsert each microbatch into a versioned
-    parquet state snapshot (max-seq-wins per key, deletes drop out).
-    Returns the final snapshot path. Idempotent under batch replay."""
-    current = {"path": None, "epoch": -1}
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        snap = batch
-        if current["path"] is not None:
-            prev = batch.sparkSession.read.parquet(current["path"])
-            snap = prev.unionByName(batch)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        out = os.path.join(state_root, f"v{epoch_id}")
-        # keep tombstoned keys in the snapshot (op='d') so later
-        # replayed batches with lower seq cannot resurrect them;
-        # consumers filter op != 'd'.
-        latest.write.mode("overwrite").parquet(out)
-        current["path"] = out
-        current["epoch"] = epoch_id
-
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return current["path"]
-
-
-def streaming_latest_state_bucketed(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    n_buckets: int = 16,
-    key: str = "key",
-    seq: str = "seq",
-) -> str:
-    """Incremental foreachBatch merge over a hash-bucketed snapshot
-    layout: state lives in `state_root/bucket=<b>/` partitions, and a
-    microbatch touching k buckets reads (partition-pruned) and
-    rewrites ONLY those k of N bucket directories via dynamic
-    partition overwrite — O(state touched) I/O per batch instead of
-    the O(total state) full-snapshot rewrite of
-    `streaming_latest_state`. At 100 TB state this is the difference
-    between a per-batch merge bounded by the batch's key locality and
-    rewriting the world every trigger.
-
-    Max-seq-wins per key, tombstones (op='d') retained in state so
-    lower-seq replays cannot resurrect deleted keys — consumers
-    filter op != 'd'. In-place partition overwrite is per-partition
-    staged by Spark's FileOutputCommitter; a production deployment
-    would layer a transactional table format (Delta/Iceberg) over the
-    same bucketed layout for multi-partition atomicity."""
-    stats = {"batches": []}
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        b = batch.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        touched = [r["bucket"] for r in b.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        snap = b
-        if os.path.exists(state_root) and any(
-            d.startswith("bucket=") for d in os.listdir(state_root)
-        ):
-            prev = (
-                sess.read.parquet(state_root)
-                .filter(F.col("bucket").isin(touched))  # partition pruning
-            )
-            snap = prev.unionByName(b)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        prev_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # dynamic mode: only partitions present in `latest` (the
-            # touched buckets) are replaced; the other N-k are untouched
-            latest.write.mode("overwrite").partitionBy("bucket").parquet(
-                state_root
-            )
-        finally:
-            sess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        stats["batches"].append({"epoch": epoch_id, "touched": sorted(touched)})
-
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streaming_latest_state_bucketed.last_stats = stats  # test introspection
-    return state_root
-
-
-def stream_cdc_bucketed_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same end-to-end contract as stream_cdc_latest_state but through
-    the bucket-incremental sink — must converge to the identical batch
-    latest-state oracle."""
-
-    def build(workdir, drain):
-        state_root = os.path.join(workdir, "state")
-        stream = _file_stream(spark, _stage_cdc_topic(spark, sf_dir, workdir))
-        streaming_latest_state_bucketed(spark, stream, state_root)
-        return _live_state(spark.read.parquet(state_root))
-
-    return _gate_replay(spark, "cdc_bstream_", build)
-
-
 def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: synthesize change stream → write as a multi-file
     'topic' → file-source readStream (one file per trigger, arbitrary
-    order) → foreachBatch merge → final materialized state. Must equal
-    the batch cdc_latest_state oracle exactly."""
+    order) → manifest-committed state sink, un-checkpointed → final
+    materialized state. Must equal the batch cdc_latest_state oracle
+    exactly."""
 
     def build(workdir, drain):
         state_root = os.path.join(workdir, "state")
         stream = _file_stream(spark, _stage_cdc_topic(spark, sf_dir, workdir))
-        final_path = streaming_latest_state(spark, stream, state_root)
-        return _live_state(spark.read.parquet(final_path))
+        streaming_latest_state_manifest(spark, stream, state_root)
+        return _live_state(read_manifest_state(spark, state_root))
 
     return _gate_replay(spark, "cdc_stream_", build)
+
+
+def stream_cdc_bucketed_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same contract as stream_cdc_latest_state, through the same sink
+    with a checkpoint location — the restartable path, here on a clean
+    run (manifest_commit_state reaches it only through a crash and
+    restart). Must converge to the identical batch latest-state
+    oracle."""
+
+    def build(workdir, drain):
+        state_root = os.path.join(workdir, "state")
+        stream = _file_stream(spark, _stage_cdc_topic(spark, sf_dir, workdir))
+        streaming_latest_state_manifest(
+            spark, stream, state_root,
+            checkpoint=os.path.join(workdir, "ckpt"),
+        )
+        return _live_state(read_manifest_state(spark, state_root))
+
+    return _gate_replay(spark, "cdc_bstream_", build)
 
 
 # streaming replay must converge to the batch latest-state materialization
@@ -470,11 +370,11 @@ def stream_stateful_running_counts_q(
             "value",
             F.round(F.col("value") * 100 + 1e-9).cast("double"),
         )
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+        # the last update per user carries its largest running count
         return (
-            drain(running_user_counts(ev), "update")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
+            last_write_wins(
+                drain(running_user_counts(ev), "update"), "user_id", "n_events"
+            )
             .select(
                 "user_id",
                 "n_events",
@@ -625,33 +525,37 @@ query("stream_sliding_counts", stream_sliding_counts_q, """
 
 
 # --------------------------------------------------------------------------
-# Exactly-once manifest-commit state sink (round 5).
+# The streaming state sink: exactly-once manifest commit.
 #
-# The bucket-incremental sink above concedes that multi-partition
-# atomicity needs a transactional table format; this sink supplies the
-# minimal one — the same commit idea Delta Lake's _delta_log and
-# Iceberg's metadata pointer use, reduced to a per-epoch JSON manifest
-# committed by atomic rename:
+# A bucketed state layout rewritten in place would need a
+# transactional table format for multi-bucket atomicity; this sink
+# supplies the minimal one — the same commit idea Delta Lake's
+# _delta_log and Iceberg's metadata pointer use, reduced to a
+# per-epoch JSON manifest committed by atomic rename:
 #
 #   state_root/data/e<epoch>/         immutable per-epoch parquet
 #   state_root/_manifests/manifest-<epoch>.json
-#       {"epoch": N, "buckets": {"<bucket>": "e<dir>", ...}}
+#       {"epoch": N, "buckets": {"<bucket>": "e<dir>", ...},
+#        "schema": <state schema as JSON>}
 #
 # A batch writes its merged touched-bucket state to a NEW epoch dir,
 # then commits a manifest mapping every bucket to its current dir
 # (touched buckets point at the new dir, untouched carry forward).
 # Readers resolve the latest committed manifest and read exactly the
 # referenced (dir, bucket) pairs — a crash between data write and
-# manifest rename leaves the torn epoch invisible. On restart,
-# Structured Streaming replays the same epoch id: if its manifest
-# already exists the batch is skipped wholesale (exactly-once), else
-# the epoch dir is rewritten in place and committed. Old epoch dirs
-# referenced by no manifest entry are garbage, collected by a
-# compaction pass (not needed for correctness).
+# manifest rename leaves the torn epoch invisible. The schema lets a
+# reader return an empty state when no bucket holds a row yet. On
+# restart from a checkpoint, Structured Streaming replays the same
+# epoch id: if its manifest already exists the batch is skipped
+# wholesale (exactly-once), else the epoch dir is rewritten in place
+# and committed. Old epoch dirs referenced by no manifest entry are
+# garbage, collected by a compaction pass (not needed for
+# correctness).
 # --------------------------------------------------------------------------
 
-import json
-import re as _re
+
+def _manifest_path(state_root: str, epoch: int) -> str:
+    return os.path.join(state_root, "_manifests", f"manifest-{epoch}.json")
 
 
 def _latest_manifest(state_root: str) -> tuple[str | None, int]:
@@ -659,11 +563,32 @@ def _latest_manifest(state_root: str) -> tuple[str | None, int]:
     best, best_e = None, -1
     if os.path.isdir(mdir):
         for f in os.listdir(mdir):
-            m = _re.fullmatch(r"manifest-(\d+)\.json", f)
+            m = re.fullmatch(r"manifest-(\d+)\.json", f)
             if m and int(m.group(1)) > best_e:
                 best_e = int(m.group(1))
                 best = os.path.join(mdir, f)
     return best, best_e
+
+
+def _read_manifest(state_root: str) -> tuple[int, dict]:
+    """The latest committed manifest and its epoch."""
+    mpath, epoch = _latest_manifest(state_root)
+    if mpath is None:
+        raise FileNotFoundError(f"no committed manifest under {state_root}")
+    with open(mpath) as fh:
+        return epoch, json.load(fh)
+
+
+def _commit_manifest(
+    state_root: str, epoch: int, buckets: dict[str, str], schema: dict
+) -> None:
+    """The sink's one commit point: write manifest-<epoch>.json under
+    a temp name, then rename it into place (atomic on POSIX)."""
+    mpath = _manifest_path(state_root, epoch)
+    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump({"epoch": epoch, "buckets": buckets, "schema": schema}, fh)
+    os.rename(tmp, mpath)
 
 
 def _manifest_merge_batch(
@@ -681,10 +606,8 @@ def _manifest_merge_batch(
     write but BEFORE the manifest rename — the crash-injection hook
     the kill/restart test uses to prove torn epochs stay invisible."""
     sess = batch.sparkSession
-    mdir = os.path.join(state_root, "_manifests")
-    os.makedirs(mdir, exist_ok=True)
-    mpath = os.path.join(mdir, f"manifest-{epoch_id}.json")
-    if os.path.exists(mpath):
+    os.makedirs(os.path.join(state_root, "_manifests"), exist_ok=True)
+    if os.path.exists(_manifest_path(state_root, epoch_id)):
         return  # epoch already committed — replay skips wholesale
     prev_manifest, _ = _latest_manifest(state_root)
     pointers: dict[str, str] = {}
@@ -707,24 +630,15 @@ def _manifest_merge_batch(
                 *[os.path.join(state_root, "data", d) for d in prev_dirs]
             ).filter(F.col("bucket").isin(touched))
             snap = prev.unionByName(b)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
         epoch_dir = f"e{epoch_id}"
-        latest.write.mode("overwrite").parquet(
+        last_write_wins(snap, key, seq).write.mode("overwrite").parquet(
             os.path.join(state_root, "data", epoch_dir)
         )
         for t in touched:
             pointers[str(t)] = epoch_dir
     if crash_before_commit and epoch_id in crash_before_commit:
         raise RuntimeError(f"injected crash before commit of epoch {epoch_id}")
-    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch_id, "buckets": pointers}, fh)
-    os.rename(tmp, mpath)  # the atomic commit point
+    _commit_manifest(state_root, epoch_id, pointers, b.schema.jsonValue())
 
 
 def streaming_latest_state_manifest(
@@ -735,10 +649,14 @@ def streaming_latest_state_manifest(
     key: str = "key",
     seq: str = "seq",
     crash_before_commit: set[int] | None = None,
+    checkpoint: str | None = None,
 ) -> str:
-    """foreachBatch merge into the manifest-committed bucketed layout
-    (un-checkpointed convenience wrapper; use _run_manifest_stream for
-    restart semantics)."""
+    """Drain `stream_df` into the manifest-committed bucketed state
+    under `state_root` (max-seq wins per key, tombstones kept so a
+    lower-seq replay cannot resurrect a deleted key; consumers filter
+    op != 'd'). With a `checkpoint` location the stream resumes from
+    its offsets after a crash and replays the torn epoch exactly once;
+    without one every call starts from the beginning of the topic."""
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
         _manifest_merge_batch(
@@ -746,7 +664,10 @@ def streaming_latest_state_manifest(
             crash_before_commit,
         )
 
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
+    writer = stream_df.writeStream.foreachBatch(merge).outputMode("update")
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
     try:
         q.processAllAvailable()
     finally:
@@ -757,12 +678,10 @@ def streaming_latest_state_manifest(
 def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
     """Resolve the latest committed manifest and read exactly the
     (epoch dir, bucket) pairs it references — stale copies of a
-    bucket in older epoch dirs are excluded by construction."""
-    mpath, _ = _latest_manifest(state_root)
-    if mpath is None:
-        raise FileNotFoundError(f"no committed manifest under {state_root}")
-    with open(mpath) as fh:
-        man = json.load(fh)
+    bucket in older epoch dirs are excluded by construction. A
+    manifest with no buckets (only empty epochs so far) reads as a
+    zero-row frame with the state schema."""
+    _, man = _read_manifest(state_root)
     by_dir: dict[str, list[int]] = {}
     for bk, d in man["buckets"].items():
         by_dir.setdefault(d, []).append(int(bk))
@@ -772,6 +691,8 @@ def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
             F.col("bucket").isin(bs)
         )
         out = part if out is None else out.unionByName(part)
+    if out is None:
+        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
     return out
 
 
@@ -790,79 +711,41 @@ def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # first run crashes before committing epoch 2; the restart
         # (same checkpoint) replays it and runs to completion
         try:
-            _run_manifest_stream(
-                spark, _file_stream(spark, topic), state_root, ckpt,
-                crash_before_commit={2},
+            streaming_latest_state_manifest(
+                spark, _file_stream(spark, topic), state_root,
+                crash_before_commit={2}, checkpoint=ckpt,
             )
         except Exception:
             pass  # the injected crash surfaces as a stream error
-        _run_manifest_stream(
-            spark, _file_stream(spark, topic), state_root, ckpt, None
+        streaming_latest_state_manifest(
+            spark, _file_stream(spark, topic), state_root, checkpoint=ckpt
         )
         return _live_state(read_manifest_state(spark, state_root))
 
     return _gate_replay(spark, "cdc_manifest_", build)
 
 
-def _run_manifest_stream(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    checkpoint: str,
-    crash_before_commit: set[int] | None,
-    n_buckets: int = 16,
-    key: str = "key",
-    seq: str = "seq",
-) -> None:
-    """Checkpointed variant of streaming_latest_state_manifest (the
-    query-facing path needs restart-with-same-epoch semantics, which
-    requires a persistent checkpoint location)."""
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        _manifest_merge_batch(
-            batch, epoch_id, state_root, n_buckets, key, seq,
-            crash_before_commit,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
 query("manifest_commit_state", manifest_commit_state_q, CDC_LATEST_STATE_SQL)
 
 
-def compact_manifest_state(
-    spark: SparkSession, state_root: str, n_buckets: int = 16
-) -> str:
+def compact_manifest_state(spark: SparkSession, state_root: str) -> str:
     """Compaction for the manifest layout: rewrite the current state
     into one consolidated epoch dir, commit a manifest pointing every
-    bucket at it, and delete data dirs no longer referenced. Bounds
-    the O(epochs) dir growth of a long-running stream; correctness
-    never depends on it (readers only follow manifest pointers, and
-    the commit is the same atomic rename the sink uses)."""
-    mpath, epoch = _latest_manifest(state_root)
-    if mpath is None:
-        raise FileNotFoundError(f"no committed manifest under {state_root}")
+    bucket the latest manifest lists at it, and delete data dirs no
+    longer referenced. Bounds the O(epochs) dir growth of a
+    long-running stream; correctness never depends on it (readers only
+    follow manifest pointers, and the commit is the same atomic rename
+    the sink uses)."""
+    epoch, man = _read_manifest(state_root)
     state = read_manifest_state(spark, state_root)
     compact_dir = f"compact-{epoch}"
     state.write.mode("overwrite").parquet(
         os.path.join(state_root, "data", compact_dir)
     )
-    pointers = {str(b): compact_dir for b in range(n_buckets)}
-    mdir = os.path.join(state_root, "_manifests")
-    new_mpath = os.path.join(mdir, f"manifest-{epoch + 1}.json")
-    tmp = new_mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch + 1, "buckets": pointers}, fh)
-    os.rename(tmp, new_mpath)
+    _commit_manifest(
+        state_root, epoch + 1, dict.fromkeys(man["buckets"], compact_dir),
+        man["schema"],
+    )
     data_dir = os.path.join(state_root, "data")
     for d in os.listdir(data_dir):
         if d != compact_dir:

@@ -97,8 +97,8 @@ def main() -> None:
     # 7. exactly-once manifest-commit sink: crash between data write
     # and manifest rename, restart from the same checkpoint, converge
     from debezium_spark.streaming.ingest import (
-        _run_manifest_stream,
         read_manifest_state,
+        streaming_latest_state_manifest,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
@@ -117,12 +117,15 @@ def main() -> None:
             )
 
         try:
-            _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
+            streaming_latest_state_manifest(
+                spark, stream(), state_root, checkpoint=ckpt,
+                crash_before_commit={2},
             )
         except Exception:
             pass  # the injected crash
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        streaming_latest_state_manifest(
+            spark, stream(), state_root, checkpoint=ckpt
+        )
         state = read_manifest_state(spark, state_root).filter(F.col("op") != "d")
         print(f"manifest sink after crash+restart: {state.count()} keys "
               f"(= batch latest-state: {state.count() == current.count()})")

@@ -65,8 +65,8 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
     from debezium_spark.cdc.materialize import latest_state
     from debezium_spark.streaming.ingest import (
         _latest_manifest,
-        _run_manifest_stream,
         read_manifest_state,
+        streaming_latest_state_manifest,
     )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
@@ -87,8 +87,9 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
         # run 1: crash before committing epoch 2
         with pytest.raises(Exception, match="injected crash|FOREACH_BATCH"):
-            _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
+            streaming_latest_state_manifest(
+                spark, stream(), state_root, checkpoint=ckpt,
+                crash_before_commit={2},
             )
         _, committed_epoch = _latest_manifest(state_root)
         assert committed_epoch == 1  # epoch 2's data write is torn
@@ -103,7 +104,9 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
         # run 2: same checkpoint — epoch 2 replays, commits, stream
         # finishes the remaining epochs
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        streaming_latest_state_manifest(
+            spark, stream(), state_root, checkpoint=ckpt
+        )
         # tombstones (op='d') are retained in state by design so
         # replays cannot resurrect deletes; consumers filter them
         final = read_manifest_state(spark, state_root).filter(F.col("op") != "d")
@@ -115,7 +118,9 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
         # manifests unchanged after a third full replay from scratch
         # of the same checkpointed stream (all epochs committed)
         _, e_before = _latest_manifest(state_root)
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        streaming_latest_state_manifest(
+            spark, stream(), state_root, checkpoint=ckpt
+        )
         _, e_after = _latest_manifest(state_root)
         assert e_after == e_before
         assert (
@@ -128,9 +133,9 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
 def test_manifest_compaction_preserves_state(spark, sf_dir):
     from debezium_spark.streaming.ingest import (
-        _run_manifest_stream,
         compact_manifest_state,
         read_manifest_state,
+        streaming_latest_state_manifest,
     )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
@@ -146,7 +151,9 @@ def test_manifest_compaction_preserves_state(spark, sf_dir):
             .format("parquet")
             .load(topic)
         )
-        _run_manifest_stream(spark, stream, state_root, ckpt, None)
+        streaming_latest_state_manifest(
+            spark, stream, state_root, checkpoint=ckpt
+        )
         before = {
             tuple(r)
             for r in read_manifest_state(spark, state_root)
@@ -160,3 +167,69 @@ def test_manifest_compaction_preserves_state(spark, sf_dir):
         assert before == after
         assert len(os.listdir(os.path.join(state_root, "data"))) == 1
         assert n_dirs_before > 1
+
+
+def test_empty_epoch_reads_as_empty_state(spark):
+    """A topic holding one empty parquet file drives a zero-row epoch,
+    which commits a manifest with no buckets; reading it must give a
+    zero-row frame with the state schema, not None."""
+    from debezium_spark.streaming.ingest import (
+        read_manifest_state,
+        streaming_latest_state_manifest,
+    )
+
+    schema = "key long, op string, seq long, val double"
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        spark.createDataFrame([], schema).coalesce(1).write.parquet(topic)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(topic)
+        )
+        streaming_latest_state_manifest(spark, stream, state_root)
+        state = read_manifest_state(spark, state_root)
+        assert state.count() == 0
+        assert state.columns == ["key", "op", "seq", "val", "bucket"]
+
+
+def test_compaction_keeps_every_bucket_of_the_sink(spark):
+    """Compaction re-points exactly the buckets the latest manifest
+    lists, so a sink run with more than 16 buckets loses no rows."""
+    from debezium_spark.streaming.ingest import (
+        compact_manifest_state,
+        read_manifest_state,
+        streaming_latest_state_manifest,
+    )
+
+    rows = spark.range(500).select(
+        F.col("id").alias("key"),
+        F.lit("c").alias("op"),
+        F.lit(1).cast("long").alias("seq"),
+        (F.col("id") * 1.0).alias("val"),
+    )
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        rows.repartition(2).write.parquet(topic)
+        stream = (
+            spark.readStream.schema(rows.schema)
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(topic)
+        )
+        streaming_latest_state_manifest(spark, stream, state_root, n_buckets=32)
+
+        def state():
+            return {
+                tuple(r)
+                for r in read_manifest_state(spark, state_root).collect()
+            }
+
+        before = state()
+        assert len(before) == 500
+        assert max(r[-1] for r in before) >= 16  # buckets past 0..15 hold rows
+        compact_manifest_state(spark, state_root)
+        assert state() == before

@@ -65,7 +65,10 @@ def test_out_of_order_delivery_converges(spark, sf_dir):
     import os
     import tempfile
 
-    from debezium_spark.streaming.ingest import streaming_latest_state
+    from debezium_spark.streaming.ingest import (
+        read_manifest_state,
+        streaming_latest_state_manifest,
+    )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
     with tempfile.TemporaryDirectory() as workdir:
@@ -86,11 +89,10 @@ def test_out_of_order_delivery_converges(spark, sf_dir):
             .format("parquet")
             .load(topic)
         )
-        final_path = streaming_latest_state(
-            spark, stream, os.path.join(workdir, "state")
-        )
+        state_root = os.path.join(workdir, "state")
+        streaming_latest_state_manifest(spark, stream, state_root)
         final = (
-            spark.read.parquet(final_path)
+            read_manifest_state(spark, state_root)
             .filter(F.col("op") != "d")
             .select("key", "seq", "after_totalprice")
         )
@@ -157,12 +159,15 @@ def test_stateful_running_counts(spark, sf_dir):
 
 def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
     """Batch 1 seeds all buckets; batch 2 touches a narrow key range —
-    only its k bucket dirs may change on disk, and the final state
-    must still equal max-seq-wins over both batches."""
+    only its k buckets may move to the new epoch dir (read from the
+    committed manifest pointers), and the final state must still equal
+    max-seq-wins over both batches."""
+    import json
     import shutil
 
     from debezium_spark.streaming.ingest import (
-        streaming_latest_state_bucketed,
+        read_manifest_state,
+        streaming_latest_state_manifest,
     )
 
     workdir = tempfile.mkdtemp(prefix="bucket_state_")
@@ -189,14 +194,23 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
             .format("parquet")
             .load(topic + "/*/")
         )
-        streaming_latest_state_bucketed(spark, stream, state, n_buckets=16)
-        stats = streaming_latest_state_bucketed.last_stats["batches"]
-        assert len(stats) == 2
-        first, second = stats[0]["touched"], stats[1]["touched"]
+        streaming_latest_state_manifest(spark, stream, state, n_buckets=16)
+        mdir = os.path.join(state, "_manifests")
+        manifests = sorted(os.listdir(mdir))
+        assert manifests == ["manifest-0.json", "manifest-1.json"]
+        touched = []
+        for name in manifests:
+            with open(os.path.join(mdir, name)) as fh:
+                man = json.load(fh)
+            epoch_dir = f"e{man['epoch']}"
+            touched.append(
+                [b for b, d in man["buckets"].items() if d == epoch_dir]
+            )
+        first, second = touched
         # 200 spread keys hit every bucket; 5 keys hit at most 5
         assert len(first) == 16
         assert 1 <= len(second) <= 5
-        back = spark.read.parquet(state)
+        back = read_manifest_state(spark, state)
         assert back.count() == 200
         upd = {r["key"]: r for r in back.filter("key < 5").collect()}
         assert all(upd[k]["seq"] == 2 and upd[k]["val"] == k * 10.0
