@@ -10,10 +10,21 @@ left at Spark's default so dimension tables broadcast automatically.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def host_fit(n_cpus: int, meminfo: str) -> tuple[int, str]:
+    """Default (cores, driver memory) for a host: every CPU the process
+    may run on, and half of `MemAvailable` in the `/proc/meminfo` text
+    for the driver JVM, in whole GiB, at least 1g. In local mode the
+    driver heap holds every task, so the other half is left to the
+    Python workers, off-heap buffers and the rest of the host."""
+    kb = int(re.search(r"^MemAvailable:\s+(\d+) kB", meminfo, re.M).group(1))
+    return max(n_cpus, 1), f"{max(kb // 2**21, 1)}g"
 
 
 def get_spark(
@@ -29,9 +40,13 @@ def get_spark(
     - AQE on: runtime coalescing of small shuffle partitions and
       skew-join splitting — the scale path for hot CDC keys.
     - Arrow on: every Pandas-UDF boundary is Arrow-batched.
+    - Cores and driver memory fit the host (`host_fit`) unless
+      `SPARK_GRAFT_CPUS` / `SPARK_GRAFT_DRIVER_MEM` say otherwise.
     """
+    with open("/proc/meminfo") as fh:
+        host_cores, host_mem = host_fit(len(os.sched_getaffinity(0)), fh.read())
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS", str(host_cores))
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(int(cores), 8))))
 
@@ -45,11 +60,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # RAM-backed shuffle/spill: the sandbox's shared disk is the
-        # contention point under local[32]; on a real cluster this
+        # RAM-backed shuffle/spill: a shared disk is the contention
+        # point under many local cores; on a real cluster this
         # maps to NVMe-backed local dirs per executor.
         .config(
             "spark.local.dir",

@@ -16,9 +16,13 @@ the batch oracles — streaming latest-state must equal batch
 latest-state (tested), which is the Debezium at-least-once + idempotent
 -consumer contract.
 
-At scale: the merge shuffles only on `key` (one shuffle per batch)
-and rewrites only the buckets a batch touches; maxFilesPerTrigger
-bounds per-batch volume. applyInPandasWithState carries per-key
+At scale: each epoch of the merge is one Spark plan that runs two
+jobs — prior state and batch shuffle once on `bucket`, one sort serves
+both the max-seq window and the touched-bucket filter, and an
+Observation reports the buckets written without a job of its own. It
+rewrites only the buckets a batch touches, but reads and shuffles the
+whole state (see the sink comment below); maxFilesPerTrigger bounds
+per-batch volume. applyInPandasWithState carries per-key
 running aggregates where event-time windows can't express the
 semantics.
 """
@@ -33,7 +37,7 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -530,65 +534,115 @@ query("stream_sliding_counts", stream_sliding_counts_q, """
 # A bucketed state layout rewritten in place would need a
 # transactional table format for multi-bucket atomicity; this sink
 # supplies the minimal one — the same commit idea Delta Lake's
-# _delta_log and Iceberg's metadata pointer use, reduced to a
-# per-epoch JSON manifest committed by atomic rename:
+# _delta_log and Iceberg's metadata pointer use, reduced to a JSON
+# manifest per commit, committed by atomic rename:
 #
 #   state_root/data/e<epoch>/         immutable per-epoch parquet
-#   state_root/_manifests/manifest-<epoch>.json
+#   state_root/_manifests/manifest-<n>.json
 #       {"epoch": N, "buckets": {"<bucket>": "e<dir>", ...},
 #        "schema": <state schema as JSON>}
 #
-# A batch writes its merged touched-bucket state to a NEW epoch dir,
-# then commits a manifest mapping every bucket to its current dir
-# (touched buckets point at the new dir, untouched carry forward).
+# `n` numbers commits (0, 1, 2, ...); "epoch" is the last stream epoch
+# whose batch the committed state holds. Each stream epoch commits
+# one manifest, and so does each compaction (same "epoch" as the
+# manifest it compacts), so the two never claim the same number.
+#
+# Each epoch is ONE Spark plan that runs two jobs (a shuffle map stage,
+# then the write). It unions the prior state — every (dir, bucket)
+# pair the latest manifest points at, read in one scan with the known
+# state schema so no schema-inference job runs — with the batch,
+# tagging batch rows `__new`; repartitions on `bucket`; keeps the
+# max-seq row per (bucket, key) (`last_write_wins`; `bucket` is a
+# function of `key`); and keeps only the buckets where a batch row
+# won, found with a max over `Window.partitionBy("bucket")`. One
+# Exchange and one Sort serve both windows. The rows go to a NEW epoch
+# dir, and an Observation on the written rows collects their bucket
+# set during the write, with no job of its own: exactly those buckets
+# point at the new dir in the manifest, the others carry forward (so a
+# batch of stale redeliveries, which wins no row, moves no pointer).
+#
+# Trade-offs. The merge reads, shuffles and sorts the whole state, not
+# only the touched buckets' rows: the touched set is known only once
+# the plan has run. A uniform stream touches every bucket, so there it
+# moves the same rows; a sparse stream (a few keys per epoch against a
+# large state) moves more. Reduce-side parallelism is bounded by the
+# bucket count, the sink's unit of rewrite anyway.
+#
 # Readers resolve the latest committed manifest and read exactly the
 # referenced (dir, bucket) pairs — a crash between data write and
 # manifest rename leaves the torn epoch invisible. The schema lets a
 # reader return an empty state when no bucket holds a row yet. On
 # restart from a checkpoint, Structured Streaming replays the same
-# epoch id: if its manifest already exists the batch is skipped
-# wholesale (exactly-once), else the epoch dir is rewritten in place
-# and committed. Old epoch dirs referenced by no manifest entry are
-# garbage, collected by a compaction pass (not needed for
+# epoch id: if the latest manifest already holds that epoch the batch
+# is skipped wholesale (exactly-once), else the epoch dir is rewritten
+# in place and committed. Old epoch dirs referenced by no manifest
+# entry are garbage, collected by a compaction pass (not needed for
 # correctness).
 # --------------------------------------------------------------------------
 
 
-def _manifest_path(state_root: str, epoch: int) -> str:
-    return os.path.join(state_root, "_manifests", f"manifest-{epoch}.json")
-
-
 def _latest_manifest(state_root: str) -> tuple[str | None, int]:
+    """The path and commit number of the latest manifest (None, -1
+    before the first commit)."""
     mdir = os.path.join(state_root, "_manifests")
-    best, best_e = None, -1
+    best, best_n = None, -1
     if os.path.isdir(mdir):
         for f in os.listdir(mdir):
             m = re.fullmatch(r"manifest-(\d+)\.json", f)
-            if m and int(m.group(1)) > best_e:
-                best_e = int(m.group(1))
+            if m and int(m.group(1)) > best_n:
+                best_n = int(m.group(1))
                 best = os.path.join(mdir, f)
-    return best, best_e
+    return best, best_n
 
 
 def _read_manifest(state_root: str) -> tuple[int, dict]:
-    """The latest committed manifest and its epoch."""
-    mpath, epoch = _latest_manifest(state_root)
+    """The latest committed manifest and its commit number."""
+    mpath, n = _latest_manifest(state_root)
     if mpath is None:
         raise FileNotFoundError(f"no committed manifest under {state_root}")
     with open(mpath) as fh:
-        return epoch, json.load(fh)
+        return n, json.load(fh)
 
 
 def _commit_manifest(
-    state_root: str, epoch: int, buckets: dict[str, str], schema: dict
+    state_root: str, n: int, epoch: int, buckets: dict[str, str], schema: dict
 ) -> None:
-    """The sink's one commit point: write manifest-<epoch>.json under
-    a temp name, then rename it into place (atomic on POSIX)."""
-    mpath = _manifest_path(state_root, epoch)
+    """The sink's one commit point: write manifest-<n>.json under a
+    temp name, then rename it into place (atomic on POSIX)."""
+    mpath = os.path.join(state_root, "_manifests", f"manifest-{n}.json")
     tmp = mpath + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         json.dump({"epoch": epoch, "buckets": buckets, "schema": schema}, fh)
     os.rename(tmp, mpath)
+
+
+def _pointed_state(
+    spark: SparkSession, state_root: str, buckets: dict[str, str],
+    schema: StructType,
+) -> DataFrame:
+    """The rows of each bucket in the dir `buckets` points it at: ONE
+    scan over every pointed dir, read with the given state schema (no
+    schema-inference job), that keeps a row only when the file it came
+    from sits in its bucket's dir. One scan packs the small per-epoch
+    files into few tasks; a scan per dir would cost a task and a
+    reader setup per dir. No pointers read as a zero-row frame with
+    that schema."""
+    if not buckets:  # a zero-partition RDD: no tasks when a plan scans it
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    data = os.path.join(state_root, "data")
+    dir_of = F.create_map(
+        *[x for bk, d in sorted(buckets.items()) for x in (F.lit(int(bk)), F.lit(d))]
+    )
+    # the name of the dir a row's file sits in, by a byte scan: a regex
+    # here costs more than the rest of a sparse epoch's merge
+    file_dir = F.substring_index(
+        F.substring_index(F.col("_metadata.file_path"), "/", -2), "/", 1
+    )
+    return (
+        spark.read.schema(schema)
+        .parquet(*[os.path.join(data, d) for d in sorted(set(buckets.values()))])
+        .filter(F.try_element_at(dir_of, F.col("bucket")) == file_dir)
+    )
 
 
 def _manifest_merge_batch(
@@ -600,45 +654,50 @@ def _manifest_merge_batch(
     seq: str,
     crash_before_commit: set[int] | None,
 ) -> None:
-    """One epoch of the manifest protocol: merge touched buckets into
-    a new immutable epoch dir, then atomically commit the manifest.
-    `crash_before_commit`: epoch ids at which to raise AFTER the data
-    write but BEFORE the manifest rename — the crash-injection hook
-    the kill/restart test uses to prove torn epochs stay invisible."""
-    sess = batch.sparkSession
+    """One epoch of the manifest protocol: merge the touched buckets
+    into a new immutable epoch dir in one plan, then atomically commit
+    the manifest. `crash_before_commit`: epoch ids at which to raise
+    AFTER the data write but BEFORE the manifest rename — the
+    crash-injection hook the kill/restart test uses to prove torn
+    epochs stay invisible."""
     os.makedirs(os.path.join(state_root, "_manifests"), exist_ok=True)
-    if os.path.exists(_manifest_path(state_root, epoch_id)):
+    mpath, n = _latest_manifest(state_root)
+    man = {"epoch": -1, "buckets": {}}
+    if mpath is not None:
+        with open(mpath) as fh:
+            man = json.load(fh)
+    if epoch_id <= man["epoch"]:
         return  # epoch already committed — replay skips wholesale
-    prev_manifest, _ = _latest_manifest(state_root)
-    pointers: dict[str, str] = {}
-    if prev_manifest is not None:
-        with open(prev_manifest) as fh:
-            pointers = json.load(fh)["buckets"]
     b = batch.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
     )
-    touched = sorted(
-        r["bucket"] for r in b.select("bucket").distinct().collect()
+    prev = _pointed_state(batch.sparkSession, state_root, man["buckets"], b.schema)
+    merged = last_write_wins(
+        prev.withColumn("__new", F.lit(False))
+        .unionByName(b.withColumn("__new", F.lit(True)))
+        .repartition("bucket"),
+        ["bucket", key], seq,
     )
-    if touched:
-        prev_dirs = sorted(
-            {pointers[str(t)] for t in touched if str(t) in pointers}
+    written = Observation()
+    epoch_dir = f"e{epoch_id}"
+    epoch_path = os.path.join(state_root, "data", epoch_dir)
+    (
+        merged.withColumn(
+            "__touched", F.max("__new").over(Window.partitionBy("bucket"))
         )
-        snap = b
-        if prev_dirs:
-            prev = sess.read.parquet(
-                *[os.path.join(state_root, "data", d) for d in prev_dirs]
-            ).filter(F.col("bucket").isin(touched))
-            snap = prev.unionByName(b)
-        epoch_dir = f"e{epoch_id}"
-        last_write_wins(snap, key, seq).write.mode("overwrite").parquet(
-            os.path.join(state_root, "data", epoch_dir)
-        )
-        for t in touched:
-            pointers[str(t)] = epoch_dir
+        .filter("__touched")
+        .drop("__new", "__touched")
+        .observe(written, F.collect_set("bucket").alias("buckets"))
+        .write.mode("overwrite")
+        .parquet(epoch_path)
+    )
+    touched = sorted(written.get["buckets"])
+    if not touched:
+        shutil.rmtree(epoch_path)  # nothing points at an empty epoch dir
+    pointers = {**man["buckets"], **dict.fromkeys(map(str, touched), epoch_dir)}
     if crash_before_commit and epoch_id in crash_before_commit:
         raise RuntimeError(f"injected crash before commit of epoch {epoch_id}")
-    _commit_manifest(state_root, epoch_id, pointers, b.schema.jsonValue())
+    _commit_manifest(state_root, n + 1, epoch_id, pointers, b.schema.jsonValue())
 
 
 def streaming_latest_state_manifest(
@@ -682,18 +741,9 @@ def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
     manifest with no buckets (only empty epochs so far) reads as a
     zero-row frame with the state schema."""
     _, man = _read_manifest(state_root)
-    by_dir: dict[str, list[int]] = {}
-    for bk, d in man["buckets"].items():
-        by_dir.setdefault(d, []).append(int(bk))
-    out = None
-    for d, bs in sorted(by_dir.items()):
-        part = spark.read.parquet(os.path.join(state_root, "data", d)).filter(
-            F.col("bucket").isin(bs)
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
-    return out
+    return _pointed_state(
+        spark, state_root, man["buckets"], StructType.fromJson(man["schema"])
+    )
 
 
 def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,16 +785,20 @@ def compact_manifest_state(spark: SparkSession, state_root: str) -> str:
     longer referenced. Bounds the O(epochs) dir growth of a
     long-running stream; correctness never depends on it (readers only
     follow manifest pointers, and the commit is the same atomic rename
-    the sink uses)."""
-    epoch, man = _read_manifest(state_root)
-    state = read_manifest_state(spark, state_root)
-    compact_dir = f"compact-{epoch}"
+    the sink uses). Its manifest takes the next commit number and
+    keeps the compacted manifest's "epoch", so a checkpointed stream
+    that resumes afterwards commits its next epoch on top of it."""
+    n, man = _read_manifest(state_root)
+    state = _pointed_state(
+        spark, state_root, man["buckets"], StructType.fromJson(man["schema"])
+    )
+    compact_dir = f"compact-{n}"
     state.write.mode("overwrite").parquet(
         os.path.join(state_root, "data", compact_dir)
     )
     _commit_manifest(
-        state_root, epoch + 1, dict.fromkeys(man["buckets"], compact_dir),
-        man["schema"],
+        state_root, n + 1, man["epoch"],
+        dict.fromkeys(man["buckets"], compact_dir), man["schema"],
     )
     data_dir = os.path.join(state_root, "data")
     for d in os.listdir(data_dir):

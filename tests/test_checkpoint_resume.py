@@ -233,3 +233,47 @@ def test_compaction_keeps_every_bucket_of_the_sink(spark):
         assert max(r[-1] for r in before) >= 16  # buckets past 0..15 hold rows
         compact_manifest_state(spark, state_root)
         assert state() == before
+
+
+def test_stream_resumes_after_compaction(spark):
+    """Compaction commits a manifest of its own between two runs of a
+    checkpointed stream; the resumed stream's next epoch must still
+    commit, not be skipped as already committed."""
+    from debezium_spark.streaming.ingest import (
+        compact_manifest_state,
+        read_manifest_state,
+        streaming_latest_state_manifest,
+    )
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("key"),
+            F.lit("c").alias("op"),
+            F.lit(1).cast("long").alias("seq"),
+            (F.col("id") * 1.0).alias("val"),
+        )
+
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        ckpt = os.path.join(workdir, "ckpt")
+
+        def drain():
+            stream = (
+                spark.readStream.schema(rows(0, 1).schema)
+                .option("maxFilesPerTrigger", 1)
+                .format("parquet")
+                .load(topic)
+            )
+            streaming_latest_state_manifest(
+                spark, stream, state_root, checkpoint=ckpt
+            )
+
+        rows(0, 100).coalesce(1).write.parquet(topic)
+        drain()
+        compact_manifest_state(spark, state_root)
+        rows(100, 150).coalesce(1).write.mode("append").parquet(topic)
+        drain()
+        state = read_manifest_state(spark, state_root)
+        assert state.count() == 150
+        assert state.select("key").distinct().count() == 150

@@ -210,6 +210,11 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
         # 200 spread keys hit every bucket; 5 keys hit at most 5
         assert len(first) == 16
         assert 1 <= len(second) <= 5
+        # epoch 1's dir holds exactly the buckets moved to it, so an
+        # untouched bucket is never rewritten
+        written = spark.read.parquet(os.path.join(state, "data", "e1"))
+        assert {str(r["bucket"]) for r in
+                written.select("bucket").distinct().collect()} == set(second)
         back = read_manifest_state(spark, state)
         assert back.count() == 200
         upd = {r["key"]: r for r in back.filter("key < 5").collect()}
@@ -219,6 +224,96 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
         assert untouched.count() == 0
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _key_rows(spark, lo, hi, seq):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("key"),
+        F.lit("u").alias("op"),
+        F.lit(seq).cast("long").alias("seq"),
+        (F.col("id") * float(seq)).alias("val"),
+    )
+
+
+def test_manifest_sink_runs_two_jobs_per_epoch(spark):
+    """Each epoch of the sink is one Spark plan: a shuffle map stage,
+    then the write. No schema-inference or touched-bucket job runs
+    beside it. Structured Streaming runs a query's jobs under its run
+    id as the job group, so the jobs are counted per run id."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from debezium_spark.streaming.ingest import streaming_latest_state_manifest
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.run_ids = set()
+
+        def onQueryStarted(self, event):  # noqa: N802
+            self.run_ids.add(str(event.runId))
+
+        def onQueryProgress(self, event):  # noqa: N802
+            pass
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            pass
+
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        with tempfile.TemporaryDirectory() as workdir:
+            topic = os.path.join(workdir, "topic")
+            state = os.path.join(workdir, "state")
+            # overlapping key ranges: epochs 1 and 2 merge into prior state
+            for i, (lo, hi) in enumerate([(0, 300), (100, 400), (200, 500)]):
+                _key_rows(spark, lo, hi, i + 1).coalesce(1).write.mode(
+                    "append").parquet(topic)
+            stream = (
+                spark.readStream.schema(_key_rows(spark, 0, 1, 1).schema)
+                .option("maxFilesPerTrigger", 1)
+                .format("parquet")
+                .load(topic)
+            )
+            streaming_latest_state_manifest(spark, stream, state)
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            n_epochs = len(os.listdir(os.path.join(state, "_manifests")))
+    finally:
+        spark.streams.removeListener(listener)
+    assert n_epochs == 3
+    assert len(listener.run_ids) == 1
+    tracker = spark.sparkContext.statusTracker()
+    jobs = sum(len(tracker.getJobIdsForGroup(r)) for r in listener.run_ids)
+    assert jobs <= 2 * n_epochs
+
+
+def test_stale_redelivery_keeps_its_bucket(spark):
+    """A batch whose only row is an older copy of a stored key (an
+    at-least-once redelivery) wins no row, so its bucket must keep
+    pointing at the rows it had: none of them may be lost."""
+    from debezium_spark.streaming.ingest import (
+        read_manifest_state,
+        streaming_latest_state_manifest,
+    )
+
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state = os.path.join(workdir, "state")
+        _key_rows(spark, 0, 200, 2).coalesce(1).write.parquet(topic)
+        _key_rows(spark, 0, 1, 1).coalesce(1).write.mode("append").parquet(topic)
+        stream = (
+            spark.readStream.schema(_key_rows(spark, 0, 1, 1).schema)
+            .option("maxFilesPerTrigger", 1)
+            .format("parquet")
+            .load(topic)
+        )
+        streaming_latest_state_manifest(spark, stream, state)
+        assert sorted(os.listdir(os.path.join(state, "_manifests"))) == [
+            "manifest-0.json", "manifest-1.json"]
+        back = read_manifest_state(spark, state)
+        assert back.count() == 200
+        assert back.filter("seq != 2").count() == 0
 
 
 def test_stream_stream_join_equals_batch(spark, sf_dir):
